@@ -199,7 +199,10 @@ object Bench {
     // parse whole is this compact summary (total seconds, gate count,
     // error count, sf, cpus). Per-query data: `ms` line above + the
     // BENCH_LAST.json artifact.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // an unparsable value must not corrupt the JSON line: report the
+    // parallelism the session actually ran with instead
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.trim.toIntOption)
+      .getOrElse(spark.sparkContext.defaultParallelism)
     val nErrs = results.count(_._2.err.isDefined)
     println(s"""{"metric":"total","value":${fmt3(total)},"unit":"sec","n_queries":${results.size},"n_errors":$nErrs,"reps":$reps,"stat":"median","cpus":$cpus,"sf":"$sfDir"}""")
     spark.stop()

@@ -277,17 +277,18 @@ object PipelineQueries {
          |ORDER BY CAST(key_a AS BIGINT) ASC, CAST(key_b AS BIGINT) ASC""".stripMargin
     },
 
-    // Same pairs through the SALTED plan: shingles shared by > 8 docs
-    // pair-generate via triangle tasks (4 groups → 10 tasks) instead
-    // of one join key — the path a 100 TB corpus needs when a hot
-    // shingle would otherwise pin one straggler partition. NOTE on the
-    // bench number: the synthetic corpus has a ~925-shingle vocabulary
-    // and ~97% of shingles exceed the threshold at sf0.1, so this gate
-    // measures the WORST case — 100% of rows routed through salting —
-    // at ~2x the plain join (replication factor g). On a Zipf real-text
-    // vocabulary the hot band is a tiny row fraction and the cold
-    // majority keeps the plain self-join. Identical oracle as
-    // p_dedup_ngram_jaccard: salting is exact.
+    // Same pairs through the SALTED plan: a shingle shared by > 8 docs
+    // has its member list cut into 4 key-ordered slices and emitted as
+    // 10 slice-pair units, which one round-robin repartition spreads
+    // over tasks — the path a 100 TB corpus needs when a hot shingle
+    // would otherwise pin one straggler partition. NOTE on the bench
+    // number: the synthetic corpus has a ~925-shingle vocabulary and
+    // ~97% of shingles exceed the threshold at sf0.1, so this gate
+    // measures the WORST case — nearly every list salted. The extra
+    // cost over the plain plan is in the unit repartition both plans
+    // run: a salted list's member travels g times (its own slice's unit
+    // and g−1 cross units) instead of once; the pair work is the same.
+    // Identical oracle as p_dedup_ngram_jaccard: salting is exact.
     q("p_dedup_ngram_salted") { (s, dir) =>
       Dedup.ngramJaccardPairs(
         docs(s, dir).filter(col("doc_id") % 5 === 0), "doc_id", "text",

@@ -379,82 +379,80 @@ object Dedup {
   }
 
   /**
-   * Exact n-gram Jaccard near-dup pairs WITHOUT a cross join: explode
-   * shingles, join on the shingle (the inverted-index pattern), count
-   * common shingles per pair, then Jaccard from the pre-computed set
-   * sizes. `maxShingleFreq` drops shingles appearing in more than that
-   * many docs — the standard stop-shingle guard against join skew at
-   * scale. It defaults ON (1000): a shingle shared by >1000 documents
-   * carries no near-dup signal but turns the self-join quadratic on
-   * that key; pass None only for exact-Jaccard oracle runs on corpora
-   * known to be skew-free.
+   * Exact n-gram Jaccard near-dup pairs in ONE pass over the input: no
+   * cross join, self-join, broadcast anti/semi-join or size join. Each
+   * doc's hashed shingles explode into (shingle, {key, set size}) rows
+   * that shuffle ONCE on the shingle into its member list sorted by key
+   * (the inverted-index pattern). Each list emits its key_a < key_b
+   * pairs with codegen'd generators (`posexplode` of the list, `explode`
+   * of the slice after each position); `common` is a pair's row count,
+   * and Jaccard follows from the set sizes the members carry. `keyCol`
+   * must be unique per row (a document key); null keys never pair.
+   *
+   * `maxShingleFreq` drops lists longer than that many docs — the
+   * standard stop-shingle guard against skew at scale. It defaults ON
+   * (1000): a shingle shared by >1000 documents carries no near-dup
+   * signal but makes its list's pair work quadratic; pass None only for
+   * exact-Jaccard oracle runs on corpora known to be skew-free.
    *
    * `saltAbove` keeps the MIDDLE band exact instead of relying on the
-   * cap alone: shingles with frequency in (saltAbove, maxShingleFreq]
-   * are pair-generated through triangle-task salting — rows split into
-   * `saltGroups` groups by key hash, each unordered group-pair (i ≤ j)
-   * becomes one join task, and a doc pair materializes in EXACTLY the
-   * task ({min,max} of its two groups) — so one hot key's quadratic
-   * pair work spreads over g(g+1)/2 tasks instead of one straggler
-   * partition. Same pairs, same Jaccard, different plan; None (default)
-   * keeps the single self-join.
+   * cap alone: a list longer than `saltAbove` is cut into `saltGroups`
+   * contiguous slices, emitted as g(g+1)/2 slice-pair units — a
+   * same-slice unit pairs within its slice, a cross unit pairs the lower
+   * slice's members with the higher one's — so after the round-robin
+   * repartition of units a hot shingle's pair work lands on many tasks
+   * instead of one straggler. Each pair lies in exactly one unit: same
+   * pairs, same Jaccard. None (default) keeps every list one unit.
+   *
+   * Why one read of the input, and no persist: the earlier self-join
+   * plan read it ~10 times (size join, stop-shingle anti-join, hot-set
+   * anti/semi-joins, join sides). Over a persisted input AQE plans each
+   * such scan as its own TableCacheQueryStage and reuses NO exchange
+   * above them (measured on a 6,000-doc corpus: 10 cache scans,
+   * ReusedExchange 8 → 0, 48 stages against 11 on the same input
+   * uncached) — why persisting the shingle relation once made this
+   * operator 2.5× slower. Now either input takes 5 stages.
    */
   def ngramJaccardPairs(df: DataFrame, keyCol: String, textCol: String,
                         shingleN: Int = 2, threshold: Double = 0.5,
                         maxShingleFreq: Option[Int] = Some(1000),
                         saltAbove: Option[Int] = None,
                         saltGroups: Int = 8): DataFrame = {
-    // NOT persisted (measured r17): caching the (k, shingles) relation
-    // like minhashNearDups does made the salted gate 2.5× SLOWER
-    // (alternated pairs: persist+checkpoint 4.5/4.8 s vs lineage
-    // 1.6/1.9 s; the jaccard gate flat) — here the identical self-join
-    // sides already share one exchange (ReuseExchange), the remaining
-    // consumers are cheap narrow projections, and the cache fill plus
-    // eager checkpoint cost more than the recomputed shingle pass.
-    val base = graft.util.Parallelism.ensure(df)
+    require(saltGroups >= 1, s"saltGroups must be >= 1, got $saltGroups")
+    val g = saltGroups
+    val lists = graft.util.Parallelism.ensure(df)
       .select(col(keyCol).as("k"),
         hashedShingles(col(textCol), shingleN).as("sh"))
-    val sizes = base.select(col("k"), size(col("sh")).as("sz"))
-    var posting = base.select(col("k"), explode(col("sh")).as("s"))
-    maxShingleFreq.foreach { cap =>
-      val hot = posting.groupBy("s").count().filter(col("count") > cap).select("s")
-      posting = posting.join(broadcast(hot), Seq("s"), "left_anti")
-    }
-    def pairsOf(p: DataFrame): DataFrame = p.as("a")
-      .join(p.as("b"), col("a.s") === col("b.s") && col("a.k") < col("b.k"))
-      .select(col("a.k").as("key_a"), col("b.k").as("key_b"))
-    val perShingle = saltAbove match {
-      case None => pairsOf(posting)
-      case Some(t) =>
-        val hotSet = posting.groupBy("s").count()
-          .filter(col("count") > t).select("s")
-        val cold = posting.join(broadcast(hotSet), Seq("s"), "left_anti")
-        val hot = posting.join(broadcast(hotSet), Seq("s"), "left_semi")
-        val g = saltGroups
-        // row group by key hash; replicate into every task whose pair
-        // contains the group (g tasks/row — the triangle row covers)
-        val salted = hot
-          .withColumn("grp", pmod(hash(col("k")), lit(g)).cast("int"))
-          .withColumn("t", explode(array((0 until g).map(j =>
-            struct(least(col("grp"), lit(j)).as("ti"),
-              greatest(col("grp"), lit(j)).as("tj"))): _*)))
-        // diagonal task (i,i) pairs only its own group; off-diagonal
-        // (i,j) pairs only across groups — each doc pair survives in
-        // exactly one task, so no pair is double-counted
-        val hotPairs = salted.as("a").join(salted.as("b"),
-          col("a.s") === col("b.s") && col("a.t") === col("b.t") &&
-            col("a.k") < col("b.k") &&
-            when(col("a.t.ti") === col("a.t.tj"),
-              col("a.grp") === col("b.grp"))
-              .otherwise(col("a.grp") =!= col("b.grp")))
-          .select(col("a.k").as("key_a"), col("b.k").as("key_b"))
-        pairsOf(cold).unionByName(hotPairs)
-    }
-    val common = perShingle.groupBy(col("key_a"), col("key_b"))
+      .filter(col("k").isNotNull)
+      .select(struct(col("k"), size(col("sh")).as("sz")).as("m"),
+        explode(col("sh")).as("s"))
+      .groupBy("s").agg(sort_array(collect_list(col("m"))).as("ms"))
+    val n = size(col("ms"))
+    val kept = lists.filter(n.between(2, maxShingleFreq.getOrElse(Int.MaxValue)))
+    // unit (i, j) of a list cut into slices of c members: slice i against
+    // slice j; an unsalted list is the single unit (0, 0) with c = n
+    val hot = saltAbove.fold(lit(false))(t => n > t)
+    val triangle = (for (i <- 0 until g; j <- i until g) yield (i, j)).toList
+    val c = when(hot, ceil(n / g).cast("int")).otherwise(n)
+    def sliceOf(u: String) = slice(col("ms"), col(u) * col("c") + 1, col("c"))
+    val units = kept
+      .select(col("ms"), c.as("c"),
+        explode(when(hot, typedLit(triangle)).otherwise(typedLit(Seq((0, 0))))).as("u"))
+      .select(sliceOf("u._1").as("xs"),
+        when(col("u._1") =!= col("u._2"), sliceOf("u._2")).as("ys"))
+    // the list shuffle is byte-small but its pair work is quadratic, so
+    // AQE would coalesce it into too few tasks: pin the unit spread
+    units.repartition(df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
+      // a same-slice unit (ys null) pairs each member with those after it
+      .select(col("xs"), col("ys"), posexplode(col("xs")).as(Seq("i", "a")))
+      .select(col("a"), explode(coalesce(col("ys"),
+        slice(col("xs"), col("i") + 2, size(col("xs")) - col("i") - 1))).as("b"))
+      // length filter: J <= min/max of the set sizes (both sides rounded
+      // by the same division, so no pair that passes below is dropped)
+      .filter(least(col("a.sz"), col("b.sz")) / greatest(col("a.sz"), col("b.sz")) >= threshold)
+      .groupBy(col("a.k").as("key_a"), col("b.k").as("key_b"),
+        col("a.sz").as("sz_a"), col("b.sz").as("sz_b"))
       .agg(count(lit(1)).cast("double").as("common"))
-    common
-      .join(sizes.select(col("k").as("key_a"), col("sz").as("sz_a")), "key_a")
-      .join(sizes.select(col("k").as("key_b"), col("sz").as("sz_b")), "key_b")
       .withColumn("jaccard",
         col("common") / (col("sz_a") + col("sz_b") - col("common")))
       .filter(col("jaccard") >= threshold)
@@ -500,8 +498,8 @@ object Dedup {
    *     at its rep; connectivity via its star.)
    *  3. **Hot band keys salt, hotter band keys cap**: a (band, value)
    *     cell over `saltAbove` rows pair-generates through triangle-task
-   *     salting (same pairs, spread over g(g+1)/2 tasks — the
-   *     [[ngramJaccardPairs]] construction); past `maxBandFreq` the
+   *     salting (same pairs, spread over g(g+1)/2 key-hash group-pair
+   *     tasks); past `maxBandFreq` the
    *     cell is dropped — a DISCLOSED recall cap (a pair is missed only
    *     if ALL its agreeing bands are capped); pass None for the exact
    *     oracle configuration.

@@ -339,6 +339,44 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(plain.exists(p => p._1 == "1" && p._2 == "2"))
   }
 
+  test("ngram jaccard over a persisted input: identical rows, one scan of the cache") {
+    val sp = spark; import sp.implicits._
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val docs = (Seq(
+      (1L, "common filler alpha beta gamma delta epsilon zeta"),
+      (2L, "common filler alpha beta gamma delta epsilon eta"),
+      (3L, "common filler alpha beta gamma delta theta iota")) ++
+      (4L to 40L).map(i => (i, s"common filler unique$i words$i here$i now$i")))
+      .toDF("doc_id", "text")
+    val cached = docs.select("*").persist()
+    cached.count()
+    try {
+      val helper = new AdaptiveSparkPlanHelper {}
+      def run(in: DataFrame, salt: Option[Int], g: Int) = {
+        val out = Dedup.ngramJaccardPairs(in, "doc_id", "text",
+          threshold = 0.2, maxShingleFreq = None, saltAbove = salt, saltGroups = g)
+        val rows = out.collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
+          .sortBy(r => (r._1, r._2)).toSeq
+        val scans = helper.collect(out.queryExecution.executedPlan) {
+          case s: InMemoryTableScanExec => s
+        }
+        (rows, scans.size)
+      }
+      val (plain, _) = run(docs, None, 8)
+      assert(plain.exists(p => p._1 == "1" && p._2 == "2"))
+      for ((salt, g) <- Seq(None -> 8, Some(2) -> 1, Some(2) -> 4, Some(2) -> 64)) {
+        val (uncachedRows, _) = run(docs, salt, g)
+        val (cachedRows, scans) = run(cached, salt, g)
+        assert(uncachedRows == plain, s"uncached rows diverge at salt=$salt g=$g")
+        assert(cachedRows == plain, s"cached rows diverge at salt=$salt g=$g")
+        // a plan that reads the cached input once per join branch plans
+        // each read as its own cache stage and reuses no exchange above it
+        assert(scans <= 1, s"cached input scanned $scans times at salt=$salt g=$g")
+      }
+    } finally cached.unpersist(blocking = true)
+  }
+
   test("maintained IVF: full-probe view == exact KNN after churn; reopen + pruning hold") {
     val dir = "/root/testdata/sf0.001"
     val embs = Fixtures.table(spark, dir, "embeddings")
