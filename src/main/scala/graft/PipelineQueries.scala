@@ -285,9 +285,9 @@ object PipelineQueries {
     // number: the synthetic corpus has a ~925-shingle vocabulary and
     // ~97% of shingles exceed the threshold at sf0.1, so this gate
     // measures the WORST case — nearly every list salted. The extra
-    // cost over the plain plan is in the unit repartition both plans
-    // run: a salted list's member travels g times (its own slice's unit
-    // and g−1 cross units) instead of once; the pair work is the same.
+    // cost over the plain plan is the unit repartition only the salted
+    // plan runs, where a salted list's member travels g times (its own
+    // slice's unit and g−1 cross units); the pair work is the same.
     // Identical oracle as p_dedup_ngram_jaccard: salting is exact.
     q("p_dedup_ngram_salted") { (s, dir) =>
       Dedup.ngramJaccardPairs(
@@ -561,7 +561,8 @@ object PipelineQueries {
 
     // minhashNearDups' maxBandFreq hot-bucket cap EXECUTING where it
     // binds (the minhash analogue of p_dedup_hamming_capped; r11 —
-    // SharpProbe measured sharp bandings putting 88% of 2.4e9 banded
+    // STATUS.md "Round 11 — staged LSH verify + the REAL sharp-config
+    // bottleneck": sharp bandings put 88% of 2.4e9 banded
     // pair rows into common-shingle buckets at 100×). Planted corpus:
     // a 60-doc family sharing a 40-token common block (pairwise
     // J = 39/43 ≈ 0.907 — mutual TRUE near-dups, but every agreeing

@@ -7,13 +7,21 @@ import org.apache.spark.sql.functions._
  * Document deduplication for large-scale training-data pipelines:
  * exact, MinHash+LSH, SimHash and n-gram-Jaccard near-dup detection.
  *
- * Scale design (the point, per the builder brief):
+ * Scale design — filter, then verify:
  *  - signatures (shingles, MinHash, SimHash) are row-local column
  *    expressions — map-only, no shuffle, whole-stage codegen;
- *  - candidate generation shuffles on band/bucket keys only (LSH), or
- *    on shingles (exact Jaccard) — never a cross join;
- *  - at 100 TB the only all-pairs work happens inside LSH buckets,
- *    whose expected size is O(1) for a fixed collision threshold.
+ *  - every banded family (MinHash bands, SimHash/dHash Hamming cells,
+ *    embedding sign-LSH bands, n-gram shingles) finds its candidates
+ *    through ONE operator, [[bucketPairs]]: one shuffle into per-bucket
+ *    member lists, a per-list cap and salting decided from the list's
+ *    own size, then codegen'd pair emission — never a cross join or a
+ *    band self-join;
+ *  - each family keeps only its verifier: n-gram counts the pairs,
+ *    MinHash takes them distinct through a sketch prefilter and exact
+ *    Jaccard, Hamming takes `bit_count(xor)`, embedding LSH takes exact
+ *    cosine;
+ *  - at 100 TB the only all-pairs work happens inside buckets, whose
+ *    expected size is O(1) for a fixed collision threshold.
  *
  * All hashing is seeded and deterministic (xxhash64 + affine rehash
  * mod 2^31−1), so signatures are stable across runs and executors.
@@ -124,8 +132,7 @@ object Dedup {
   /** Data-driven `maxBandFreq` (the reference planner's crossover
     * pattern, src/query/planner.cc:21-46 — decide from measured
     * cardinalities, not a constant): from the band-bucket SIZE
-    * histogram (a tiny (size, buckets) relation — the full histogram
-    * is computed anyway to build the hot-bucket anti-join), pick the
+    * histogram (a tiny (size, buckets) relation), pick the
     * LARGEST cap whose surviving banded pair mass Σ_{n ≤ cap} m·C(n,2)
     * stays within `budgetPerDoc · nDocs` — candidates linear in the
     * corpus, the invariant that makes sharp bandings (4 rows/band,
@@ -164,6 +171,34 @@ object Dedup {
     math.min(cap, Int.MaxValue.toLong).toInt
   }
 
+  /** (k, sh) rows: a document key and its hashed shingles. */
+  private def shingled(df: DataFrame, keyCol: String, textCol: String,
+                       shingleN: Int): DataFrame =
+    df.select(col(keyCol).as("k"), hashedShingles(col(textCol), shingleN).as("sh"))
+
+  /** (k, sig, sz) rows of a (k, sh) relation: the MinHash signature and
+    * the shingle-set size. */
+  private def signatures(sh: DataFrame, numHashes: Int, seed: Long): DataFrame =
+    sh.select(col("k"), minhashSignature(col("sh"), numHashes, seed).as("sig"),
+      size(col("sh")).as("sz"))
+
+  /** (band, bh, m) member rows of a (k, sig) relation: one per band
+    * bucket, `m` = struct(k). */
+  private def bandRows(sigs: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
+    sigs.select(struct(col("k")).as("m"),
+        explode(bandKeys(col("sig"), bands, rowsPerBand)).as("bk"))
+      .select(col("bk.band").as("band"), col("bk.bh").as("bh"), col("m"))
+
+  /** (buckets…, freq): the member count of every bucket. */
+  private def bucketFreqs(rows: DataFrame, buckets: Seq[String]): DataFrame =
+    rows.groupBy(buckets.map(col): _*).agg(count(lit(1)).as("freq"))
+
+  /** The list SIZE histogram (size n → m lists) of [[bucketLists]]
+    * output — what [[deriveBandFreq]] reads. */
+  private def listSizeHistogram(lists: DataFrame): Array[(Long, Long)] =
+    lists.groupBy(size(col("ms")).cast("long").as("n")).agg(count(lit(1)).as("m"))
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+
   /** The cap [[BandFreqAuto]] would choose for this corpus/banding —
     * the disclosure companion ([[cappedBandBuckets]] takes an explicit
     * cap; this recomputes the histogram the detector derives from, so
@@ -171,15 +206,9 @@ object Dedup {
   def autoBandFreq(df: DataFrame, keyCol: String, textCol: String,
                    shingleN: Int = 2, numHashes: Int = 128, bands: Int = 32,
                    seed: Long = 42L): Int = {
-    val rowsPerBand = numHashes / bands
-    val sizes = df.select(
-        minhashSignature(hashedShingles(col(textCol), shingleN), numHashes, seed)
-          .as("sig"))
-      .select(explode(bandKeys(col("sig"), bands, rowsPerBand)).as("bk"))
-      .groupBy(col("bk.band"), col("bk.bh")).count()
-      .groupBy(col("count").as("n")).agg(count(lit(1)).as("m"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    deriveBandFreq(sizes, bands)
+    val sigs = signatures(shingled(df, keyCol, textCol, shingleN), numHashes, seed)
+    val lists = bucketLists(bandRows(sigs, bands, numHashes / bands), Seq("band", "bh"))
+    deriveBandFreq(listSizeHistogram(lists), bands)
   }
 
   /**
@@ -203,29 +232,18 @@ object Dedup {
     // Persist the (k, hashed shingles) base: it feeds the signature
     // pipeline AND both sides of the verification join — without the
     // persist the shingle construction executes three times (no subplan
-    // reuse across DataFrame self-join branches).
+    // reuse across DataFrame join branches).
     // widen a byte-small input: shingle hashing + signatures are the
     // compute wall (scale-adaptive — no-op when the scan already has
     // ≥ cores partitions)
-    val base = graft.util.Parallelism.ensure(df)
-      .select(col(keyCol).as("k"),
-        hashedShingles(col(textCol), shingleN).as("sh"))
+    val base = shingled(graft.util.Parallelism.ensure(df), keyCol, textCol, shingleN)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Persist the fixed-width (k, sig, sz) relation: the signature is
     // the expensive upstream (O(|shingles|·numHashes) per doc) and
-    // feeds BOTH the banding and the verify prefilter below — without
-    // the persist it would be recomputed per consumer. ~1 KB/doc at
-    // the default 128 hashes.
-    val sigs = base.select(col("k"),
-        minhashSignature(col("sh"), numHashes, seed).as("sig"),
-        size(col("sh")).as("sz"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // Persist the tiny (k, band, bh) relation: the candidate self-join
-    // would otherwise derive the banding once per side.
-    val banded = sigs.select(col("k"),
-        explode(bandKeys(col("sig"), bands, rowsPerBand)).as("bk"))
-      .select(col("k"), col("bk.band"), col("bk.bh"))
+    // feeds the banding, the auto-cap histogram and the verify
+    // prefilter below — without the persist it would be recomputed per
+    // consumer. ~1 KB/doc at the default 128 hashes.
+    val sigs = signatures(base, numHashes, seed)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // Hot-bucket guard (the banding analogue of ngramJaccardPairs'
@@ -245,32 +263,17 @@ object Dedup {
     // its RARE shingles too, so its agreeing bands include pair-
     // specific small buckets; the capped buckets are precisely the
     // common-min ones that carry no near-dup signal. None disables.
-    var hist: Option[DataFrame] = None
-    val admitted = maxBandFreq match {
-      case None => banded
-      case Some(c) =>
-        val h = banded.groupBy("band", "bh").count()
-        val cap =
-          if (c >= 0) c
-          else {
-            // auto ([[BandFreqAuto]]): the histogram feeds BOTH the
-            // size-distribution collect and the hot-bucket anti-join —
-            // persist so the banding aggregates once
-            val hp = h.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            hist = Some(hp)
-            val sizes = hp.groupBy(col("count").as("n"))
-              .agg(count(lit(1)).as("m"))
-              .collect().map(r => (r.getLong(0), r.getLong(1)))
-            deriveBandFreq(sizes, bands)
-          }
-        val hot = hist.getOrElse(h)
-          .filter(col("count") > cap).select("band", "bh")
-        banded.join(broadcast(hot), Seq("band", "bh"), "left_anti")
+    //
+    // Auto ([[BandFreqAuto]]) reads the cap off the lists' own size
+    // histogram, so the lists are persisted: built once, read by the
+    // histogram job and the pair emission (each plan scans them once).
+    val auto = maxBandFreq.exists(_ < 0)
+    val lists = {
+      val l = bucketLists(bandRows(sigs, bands, rowsPerBand), Seq("band", "bh"))
+      if (auto) l.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else l
     }
-    val cands = admitted.as("a")
-      .join(admitted.as("b"),
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("a.k") < col("b.k"))
+    val cap = if (auto) Some(deriveBandFreq(listSizeHistogram(lists), bands)) else maxBandFreq
+    val cands = listPairs(lists, cap, saltAbove = None, saltGroups = 1)
       .select(col("a.k").as("key_a"), col("b.k").as("key_b"))
       .distinct()
 
@@ -324,15 +327,15 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select(col("key_a").cast("string").as("key_a"),
         col("key_b").cast("string").as("key_b"), col("jaccard"))
-    materializeAndRelease(result, Seq(base, sigs, banded) ++ hist: _*)
+    materializeAndRelease(result, base, sigs, lists)
   }
 
   /**
    * Disclosure for [[minhashNearDups]]' `maxBandFreq` guard (the
    * minhash analogue of [[cappedCells]]): the (band, bh, freq) band
    * buckets the cap DROPS from candidate generation, built by the
-   * identical shingle→signature→banding construction so it counts
-   * exactly what the detector's anti-join drops. The recall bound it
+   * detector's own shingle→signature→banding helpers so it counts
+   * exactly the lists the detector drops. The recall bound it
    * makes checkable: a pair present at `maxBandFreq = None` is absent
    * from the capped run IFF every band the two signatures agree on
    * hashes into one of these buckets (agreement is recomputable per
@@ -345,12 +348,8 @@ object Dedup {
                         maxBandFreq: Int = 1000): DataFrame = {
     val rowsPerBand = numHashes / bands
     require(bands * rowsPerBand == numHashes, "bands must divide numHashes")
-    df.select(
-        minhashSignature(hashedShingles(col(textCol), shingleN),
-          numHashes, seed).as("sig"))
-      .select(explode(bandKeys(col("sig"), bands, rowsPerBand)).as("bk"))
-      .select(col("bk.band").as("band"), col("bk.bh").as("bh"))
-      .groupBy("band", "bh").agg(count(lit(1)).as("freq"))
+    val sigs = signatures(shingled(df, keyCol, textCol, shingleN), numHashes, seed)
+    bucketFreqs(bandRows(sigs, bands, rowsPerBand), Seq("band", "bh"))
       .filter(col("freq") > maxBandFreq)
   }
 
@@ -379,56 +378,57 @@ object Dedup {
   }
 
   /**
-   * Exact n-gram Jaccard near-dup pairs in ONE pass over the input: no
-   * cross join, self-join, broadcast anti/semi-join or size join. Each
-   * doc's hashed shingles explode into (shingle, {key, set size}) rows
-   * that shuffle ONCE on the shingle into its member list sorted by key
-   * (the inverted-index pattern). Each list emits its key_a < key_b
-   * pairs with codegen'd generators (`posexplode` of the list, `explode`
-   * of the slice after each position); `common` is a pair's row count,
-   * and Jaccard follows from the set sizes the members carry. `keyCol`
-   * must be unique per row (a document key); null keys never pair.
+   * The candidate generator every banded near-dup family shares
+   * (filter-then-verify: this is the filter, each family keeps its
+   * verifier). Member rows `(buckets…, m)` — `m` a struct whose first
+   * field is the key `k` — shuffle ONCE into per-bucket member lists
+   * sorted by `m` (the inverted-index pattern), and each list emits its
+   * member pairs `(a, b)` with `a.k < b.k` through codegen'd generators
+   * (`posexplode` of the list, `explode` of the slice after each
+   * position): one row per bucket the pair shares, so a family counts
+   * them or takes them `distinct`. Null and repeated keys never pair,
+   * but they count toward a list's size.
    *
-   * `maxShingleFreq` drops lists longer than that many docs — the
-   * standard stop-shingle guard against skew at scale. It defaults ON
-   * (1000): a shingle shared by >1000 documents carries no near-dup
-   * signal but makes its list's pair work quadratic; pass None only for
-   * exact-Jaccard oracle runs on corpora known to be skew-free.
+   * Skew is a per-list decision taken from the list's own size:
+   *  - a list longer than `cap` is dropped (the family's disclosed
+   *    recall cap; None keeps every list). It is still built once, so a
+   *    capped bucket costs its member rows, never its pair count;
+   *  - a list longer than `saltAbove` is cut into `saltGroups`
+   *    contiguous slices, emitted as g(g+1)/2 slice-pair units — a
+   *    same-slice unit pairs within its slice, a cross unit pairs the
+   *    lower slice's members with the higher one's — and with salting
+   *    on, every unit goes through one round-robin repartition, so a
+   *    hot bucket's pair work lands on many tasks instead of one
+   *    straggler. Each pair lies in exactly one unit: same pairs for
+   *    any g. None keeps every list one unit in the list shuffle's own
+   *    AQE-sized layout (forcing the spread on the small LSH buckets of
+   *    the sf0.1 gates cost more in task overhead than it saved).
    *
-   * `saltAbove` keeps the MIDDLE band exact instead of relying on the
-   * cap alone: a list longer than `saltAbove` is cut into `saltGroups`
-   * contiguous slices, emitted as g(g+1)/2 slice-pair units — a
-   * same-slice unit pairs within its slice, a cross unit pairs the lower
-   * slice's members with the higher one's — so after the round-robin
-   * repartition of units a hot shingle's pair work lands on many tasks
-   * instead of one straggler. Each pair lies in exactly one unit: same
-   * pairs, same Jaccard. None (default) keeps every list one unit.
-   *
-   * Why one read of the input, and no persist: the earlier self-join
-   * plan read it ~10 times (size join, stop-shingle anti-join, hot-set
-   * anti/semi-joins, join sides). Over a persisted input AQE plans each
-   * such scan as its own TableCacheQueryStage and reuses NO exchange
-   * above them (measured on a 6,000-doc corpus: 10 cache scans,
-   * ReusedExchange 8 → 0, 48 stages against 11 on the same input
-   * uncached) — why persisting the shingle relation once made this
-   * operator 2.5× slower. Now either input takes 5 stages.
+   * Why one read of the input, and no join: a band self-join reads its
+   * input once per side and per hot-set probe. Over a persisted input
+   * AQE plans each such scan as its own TableCacheQueryStage and reuses
+   * NO exchange above them (measured on a 6,000-doc corpus: 10 cache
+   * scans, ReusedExchange 8 → 0, 48 stages against 11 on the same input
+   * uncached; STATUS.md, top section).
    */
-  def ngramJaccardPairs(df: DataFrame, keyCol: String, textCol: String,
-                        shingleN: Int = 2, threshold: Double = 0.5,
-                        maxShingleFreq: Option[Int] = Some(1000),
-                        saltAbove: Option[Int] = None,
-                        saltGroups: Int = 8): DataFrame = {
+  private[graft] def bucketPairs(members: DataFrame, buckets: Seq[String],
+                                 cap: Option[Int], saltAbove: Option[Int],
+                                 saltGroups: Int): DataFrame =
+    listPairs(bucketLists(members, buckets), cap, saltAbove, saltGroups)
+
+  /** [[bucketPairs]]' first half: (buckets…, ms) — each bucket's
+    * member structs, sorted — in one shuffle. */
+  private def bucketLists(members: DataFrame, buckets: Seq[String]): DataFrame =
+    members.groupBy(buckets.map(col): _*)
+      .agg(sort_array(collect_list(col("m"))).as("ms"))
+
+  /** [[bucketPairs]]' second half: the pairs of [[bucketLists]] output. */
+  private def listPairs(lists: DataFrame, cap: Option[Int], saltAbove: Option[Int],
+                        saltGroups: Int): DataFrame = {
     require(saltGroups >= 1, s"saltGroups must be >= 1, got $saltGroups")
     val g = saltGroups
-    val lists = graft.util.Parallelism.ensure(df)
-      .select(col(keyCol).as("k"),
-        hashedShingles(col(textCol), shingleN).as("sh"))
-      .filter(col("k").isNotNull)
-      .select(struct(col("k"), size(col("sh")).as("sz")).as("m"),
-        explode(col("sh")).as("s"))
-      .groupBy("s").agg(sort_array(collect_list(col("m"))).as("ms"))
     val n = size(col("ms"))
-    val kept = lists.filter(n.between(2, maxShingleFreq.getOrElse(Int.MaxValue)))
+    val kept = lists.filter(n.between(2, cap.getOrElse(Int.MaxValue)))
     // unit (i, j) of a list cut into slices of c members: slice i against
     // slice j; an unsalted list is the single unit (0, 0) with c = n
     val hot = saltAbove.fold(lit(false))(t => n > t)
@@ -440,13 +440,52 @@ object Dedup {
         explode(when(hot, typedLit(triangle)).otherwise(typedLit(Seq((0, 0))))).as("u"))
       .select(sliceOf("u._1").as("xs"),
         when(col("u._1") =!= col("u._2"), sliceOf("u._2")).as("ys"))
-    // the list shuffle is byte-small but its pair work is quadratic, so
-    // AQE would coalesce it into too few tasks: pin the unit spread
-    units.repartition(df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
+    // salting spreads a hot list's units over tasks: the list shuffle is
+    // byte-small but its pair work quadratic, so AQE would coalesce it
+    // into too few tasks
+    saltAbove.fold(units)(_ => units.repartition(
+        lists.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt))
       // a same-slice unit (ys null) pairs each member with those after it
       .select(col("xs"), col("ys"), posexplode(col("xs")).as(Seq("i", "a")))
       .select(col("a"), explode(coalesce(col("ys"),
         slice(col("xs"), col("i") + 2, size(col("xs")) - col("i") - 1))).as("b"))
+      .filter(col("a.k") < col("b.k"))
+  }
+
+  /**
+   * Exact n-gram Jaccard near-dup pairs in ONE pass over the input: no
+   * cross join, self-join, broadcast anti/semi-join or size join. Each
+   * doc's hashed shingles explode into (shingle, {key, set size}) rows
+   * that [[bucketPairs]] groups per shingle and pairs; `common` is a
+   * pair's row count, and Jaccard follows from the set sizes the members
+   * carry. `keyCol` must be unique per row (a document key); null keys
+   * never pair and do not count toward a shingle's frequency.
+   *
+   * `maxShingleFreq` drops lists longer than that many docs — the
+   * standard stop-shingle guard against skew at scale. It defaults ON
+   * (1000): a shingle shared by >1000 documents carries no near-dup
+   * signal but makes its list's pair work quadratic; pass None only for
+   * exact-Jaccard oracle runs on corpora known to be skew-free.
+   *
+   * `saltAbove` keeps the MIDDLE band exact instead of relying on the
+   * cap alone: a list longer than `saltAbove` is spread over
+   * `saltGroups`(`saltGroups`+1)/2 slice-pair units (see
+   * [[bucketPairs]]) — same pairs, same Jaccard. None (default) keeps
+   * every list one unit.
+   *
+   * No persist: the operator reads its input once, so a persisted
+   * input costs one cache scan (PipelineSpec pins it).
+   */
+  def ngramJaccardPairs(df: DataFrame, keyCol: String, textCol: String,
+                        shingleN: Int = 2, threshold: Double = 0.5,
+                        maxShingleFreq: Option[Int] = Some(1000),
+                        saltAbove: Option[Int] = None,
+                        saltGroups: Int = 8): DataFrame = {
+    val members = shingled(graft.util.Parallelism.ensure(df), keyCol, textCol, shingleN)
+      .filter(col("k").isNotNull)
+      .select(struct(col("k"), size(col("sh")).as("sz")).as("m"),
+        explode(col("sh")).as("s"))
+    bucketPairs(members, Seq("s"), maxShingleFreq, saltAbove, saltGroups)
       // length filter: J <= min/max of the set sizes (both sides rounded
       // by the same division, so no pair that passes below is dropped)
       .filter(least(col("a.sz"), col("b.sz")) / greatest(col("a.sz"), col("b.sz")) >= threshold)
@@ -471,216 +510,125 @@ object Dedup {
     df.withColumn(outCol,
       graft.functions.simhash64(array_distinct(split(col(textCol), " "))))
 
+  /** (k, hash, band, bv) rows of a (k, hash) relation: the four 16-bit
+    * pigeonhole cells of each 64-bit hash. */
+  private def cellRows(rows: DataFrame): DataFrame =
+    rows.select(col("k"), col("hash"),
+        explode(array((0 until 4).map(j => struct(lit(j).as("band"),
+          shiftrightunsigned(col("hash"), j * 16).bitwiseAND(lit(0xFFFFL)).as("bv"))): _*))
+          .as("bk"))
+      .select(col("k"), col("hash"), col("bk.band").as("band"), col("bk.bv").as("bv"))
+
+  /** The identical-hash class tier over non-null (k, hash) rows:
+    * `members` — every row with its class's min key `rep` and size
+    * `m` — and the cell-candidate set: the (k, hash) rows of classes of
+    * ≤ `cliqueCap` plus ONE (rep, hash) row per larger class. */
+  private def hashClasses(sigs: DataFrame, cliqueCap: Int): (DataFrame, DataFrame) = {
+    val classes = sigs.groupBy(col("hash"))
+      .agg(min(col("k")).as("rep"), count(lit(1)).as("m"))
+    val members = sigs.join(classes, Seq("hash"))
+    val joinSet = members.filter(col("m") <= cliqueCap).select(col("k"), col("hash"))
+      .unionByName(classes.filter(col("m") > cliqueCap)
+        .select(col("rep").as("k"), col("hash")))
+    (members, joinSet)
+  }
+
   /**
    * Guarded all-pairs Hamming near-dup core over a `(k, hash)` relation
    * (64-bit hashes, 4×16-bit pigeonhole bands): any pair within Hamming
    * distance ≤ 3 must agree on at least one whole band, so candidates
-   * come from exact band-key joins and `bit_count(xor)` verifies. The
-   * naive band self-join is the right 100 TB shape for DISPERSED hashes
-   * but a skew scale-killer on degenerate corpora (blank images, silent
-   * audio, boilerplate pages all land on ONE identical hash → one
-   * straggler task doing O(modal²) work). Three guards, all tiered by a
-   * frequency count that is itself linear:
+   * come from the band cells through [[bucketPairs]] and
+   * `bit_count(xor)` verifies. Dispersed hashes need nothing more, but
+   * degenerate corpora (blank images, silent audio, boilerplate pages
+   * all land on ONE identical hash) would put O(modal²) pair work in
+   * each of that hash's cells. Two guards:
    *
    *  1. **Identical hashes are exact dups** (hamming = 0) — they group,
-   *     they don't self-join. A class of ≤ `cliqueCap` members emits
-   *     its exact pair clique (bounded per-key work); a larger class
-   *     emits a STAR from its min-key representative — O(m) edges that
-   *     keep the class connected. Downstream consumers are unaffected:
-   *     connected components and [[dropNearDups]] survivors are
-   *     IDENTICAL under star edges (the component's min key never has a
-   *     smaller neighbor in either graph; every other member keeps
-   *     one).
-   *  2. **Oversized classes join once**: the cross-class band join sees
-   *     members of small classes but only the REPRESENTATIVE of a
-   *     > `cliqueCap` class, so a modal class contributes one row per
-   *     band, not millions. (Cross edges to an oversized class attach
-   *     at its rep; connectivity via its star.)
-   *  3. **Hot band keys salt, hotter band keys cap**: a (band, value)
-   *     cell over `saltAbove` rows pair-generates through triangle-task
-   *     salting (same pairs, spread over g(g+1)/2 key-hash group-pair
-   *     tasks); past `maxBandFreq` the
-   *     cell is dropped — a DISCLOSED recall cap (a pair is missed only
-   *     if ALL its agreeing bands are capped); pass None for the exact
+   *     they don't band. A class of ≤ `cliqueCap` members emits its
+   *     exact pair clique (one [[bucketPairs]] list per class); a larger
+   *     class emits a STAR from its min-key representative — O(m) edges
+   *     that keep the class connected. Downstream consumers are
+   *     unaffected: connected components and [[dropNearDups]] survivors
+   *     are IDENTICAL under star edges (the component's min key never
+   *     has a smaller neighbor in either graph; every other member keeps
+   *     one). The cells then see members of small classes but only the
+   *     REPRESENTATIVE of a > `cliqueCap` class, so a modal class adds
+   *     one member per cell, not millions (cross edges to it attach at
+   *     its rep; connectivity via its star).
+   *  2. **Hot cells salt, hotter cells cap**: a cell over `saltAbove`
+   *     members is spread over g(g+1)/2 slice-pair units (same pairs);
+   *     a cell over both `saltAbove` and `maxBandFreq` is dropped — a
+   *     DISCLOSED recall cap ([[cappedCells]]: a pair is missed only if
+   *     ALL its agreeing bands are capped); pass None for the exact
    *     oracle configuration.
    *
-   * The guard is ADAPTIVE: band-cell frequencies are measured first,
-   * and a corpus whose hottest cell fits `cliqueCap` takes the plain
-   * pigeonhole self-join (the right plan for dispersed hashes — no
-   * guard machinery, no extra stages); only a measured-skewed corpus
-   * pays the tiered path. Same output either way below the tiers'
-   * thresholds. The stats job is CHEAP by construction: an
-   * identical-hash class lands WHOLE in each of its four cells, so
-   * maxCell ≥ maxClass and the cell histogram alone (≤ 4·2^16 groups —
-   * map-side partial aggregation bounds the shuffle regardless of
-   * corpus size) proves every class fits `cliqueCap` in the common
-   * dispersed case; the per-class exact count (a ~n-group shuffle that
-   * partial aggregation cannot compress) is paid only in the narrow
-   * band where cells exceed `cliqueCap` but still fit `saltAbove`.
+   * The class tier runs only when a class exceeds `cliqueCap` or a
+   * cell exceeds `saltAbove`; otherwise the cells alone give the same
+   * pairs, identical hashes included. The cell histogram decides it
+   * cheaply: at most 4·2^16 cells, so map-side partial aggregation
+   * bounds its shuffle however large the corpus, and a class lands
+   * whole in each of its four cells, so the hottest cell bounds the
+   * largest class. Only a corpus whose hottest cell falls between
+   * `cliqueCap` and `saltAbove` pays an exact class count (the sf0.1
+   * `p_dedup_simhash` corpus: hottest cell 1,362, largest class 281).
    *
-   * Null hashes never pair: the fast path's band join drops them
-   * (null bv matches nothing), and the tiered path filters them up
-   * front — otherwise groupBy(hash) would fuse every null-hash row
-   * (e.g. simhash of null text) into one giant spurious "identical"
-   * class, declaring distinct documents exact dups.
+   * Null hashes never pair: they are filtered up front — otherwise
+   * groupBy(hash) would fuse every null-hash row (e.g. simhash of null
+   * text) into one giant spurious "identical" class, declaring distinct
+   * documents exact dups. Keys are expected unique per row (document or
+   * media ids): cell pairs are distinct, but the class tier emits its
+   * clique and star edges per member row, so a repeated key repeats them.
    */
   // saltAbove calibrates to TASK time, not row count: an 8192-row cell
   // is ~32M pair-checks — sub-second in one task; salting below that
-  // buys nothing and forces the tiered plan onto harmless corpora.
+  // buys nothing.
   private[graft] def hammingNearDups(hashes: DataFrame, maxHamming: Int,
                                      cliqueCap: Int = 1000,
                                      saltAbove: Int = 8192, saltGroups: Int = 8,
                                      maxBandFreq: Option[Int] = Some(100000)): DataFrame = {
     require(maxHamming <= 3, "4-band pigeonhole guarantees recall only for distance <= 3")
-    def bandsOf(c: Column) = array((0 until 4).map(j => struct(lit(j).as("band"),
-      shiftrightunsigned(c, j * 16).bitwiseAND(lit(0xFFFFL)).as("bv"))): _*)
-    // Null-hash rows can never pair (see scaladoc); drop them before
-    // EITHER plan so the tiered path's groupBy(hash) agrees with the
-    // fast path's null-propagating band join.
-    val nonNull = hashes.filter(col("hash").isNotNull)
     // Persist the NARROW (k, hash) relation — computing `hash`
     // upstream (e.g. simhash over full text) is the expensive part;
-    // the 4× banded explode is trivial to re-derive from cache, so
-    // caching post-explode would just store 4× the rows for nothing.
-    // One cached relation serves the planner stats, both sides of the
-    // fast path's join, and the tiered path's class machinery.
-    val sigs = nonNull.select(col("k"), col("hash"))
+    // it feeds the cell stat and the pairs job.
+    val sigs = hashes.filter(col("hash").isNotNull).select(col("k"), col("hash"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded = sigs.select(col("k"), col("hash"),
-        explode(bandsOf(col("hash"))).as("bk"))
-      .select(col("k"), col("hash"), col("bk.band").as("band"), col("bk.bv").as("bv"))
-    // planner stats, tier 1 (always): the cell histogram. groupBy on
-    // (band, bv) has at most 4·2^16 groups, so map-side partial
-    // aggregation bounds the exchange at ~256k rows per task however
-    // large the corpus — NOT the 4n-group per-(cell, hash) rollup the
-    // guard used to pay on every call.
-    val cRow = banded.groupBy(col("band"), col("bv"))
-      .agg(count(lit(1)).as("cf"))
-      .agg(max(col("cf"))).collect()(0)
+    // a cell is dropped only past BOTH thresholds
+    val cellCap = maxBandFreq.map(math.max(_, saltAbove))
+    val cRow = bucketFreqs(cellRows(sigs), Seq("band", "bv"))
+      .agg(max(col("freq"))).collect()(0)
     val maxCell = if (cRow.isNullAt(0)) 0L else cRow.getLong(0)
-    // planner stats, tier 2 (rare): the exact largest identical-hash
-    // class. maxCell ≥ maxM (a class lands whole in each of its four
-    // cells), so maxCell ≤ cliqueCap already PROVES maxM ≤ cliqueCap;
-    // and maxCell > saltAbove forces the tiered path regardless of
-    // maxM. Only the in-between band pays the ~n-group shuffle.
-    val maxM =
-      if (maxCell <= math.min(cliqueCap.toLong, saltAbove.toLong)) 0L
-      else if (maxCell <= saltAbove) {
-        val mRow = sigs.groupBy(col("hash")).agg(count(lit(1)).as("m"))
-          .agg(max(col("m"))).collect()(0)
-        if (mRow.isNullAt(0)) 0L else mRow.getLong(0)
-      } else Long.MaxValue
-    if (maxM <= cliqueCap && maxCell <= saltAbove) {
-      // dispersed corpus (the measured-normal case): plain pigeonhole
-      // self-join — per-cell work is bounded by the stats just taken
-      val result = banded.as("a")
-        .join(banded.as("b"),
-          col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
-            col("a.k") < col("b.k"))
-        .select(col("a.k").as("key_a"), col("b.k").as("key_b"),
-          bit_count(col("a.hash").bitwiseXOR(col("b.hash"))).as("hamming"))
-        .filter(col("hamming") <= maxHamming)
-        .distinct()
-      return materializeAndRelease(result, sigs)
+    // the exact largest class, paid only in the band where the cell stat
+    // cannot bound it (cliqueCap < maxCell ≤ saltAbove) — an ~n-group
+    // shuffle that partial aggregation cannot compress
+    def maxClass = {
+      val mRow = sigs.groupBy(col("hash")).agg(count(lit(1)).as("m"))
+        .agg(max(col("m"))).collect()(0)
+      if (mRow.isNullAt(0)) 0L else mRow.getLong(0)
     }
-    // measured-skewed corpus: the tiered plan (class machinery reads
-    // the cached (k, hash) relation directly — one row per member)
-    val base = sigs
-    val classes = base.groupBy(col("hash"))
-      .agg(min(col("k")).as("rep"), count(lit(1)).as("m"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val members = base.join(classes, Seq("hash"))
-    // 1. within-class (hamming = 0): exact clique below the cap, star above
-    val small = members.filter(col("m") > 1 && col("m") <= cliqueCap)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val clique = small.as("a").join(small.as("b"),
-        col("a.hash") === col("b.hash") && col("a.k") < col("b.k"))
+    val tiered = maxCell > saltAbove || (maxCell > cliqueCap && maxClass > cliqueCap)
+    // in the tiered plan the class tier owns every hamming-0 pair
+    val minHamming = if (tiered) 1 else 0
+    def cellPairs(rows: DataFrame) = bucketPairs(
+        cellRows(rows).select(col("band"), col("bv"),
+          struct(col("k"), col("hash")).as("m")),
+        // no list can pass saltAbove unless the hottest cell does
+        Seq("band", "bv"), cellCap, Some(saltAbove).filter(_ < maxCell), saltGroups)
       .select(col("a.k").as("key_a"), col("b.k").as("key_b"),
-        lit(0).as("hamming"))
+        bit_count(col("a.hash").bitwiseXOR(col("b.hash"))).as("hamming"))
+      .filter(col("hamming").between(minHamming, maxHamming))
+      .distinct()
+    if (!tiered) return materializeAndRelease(cellPairs(sigs), sigs)
+    val (members, joinSet) = hashClasses(sigs, cliqueCap)
+    // 1. within-class (hamming = 0): exact clique below the cap, star above
+    val clique = bucketPairs(
+        members.filter(col("m") <= cliqueCap).select(col("hash"), struct(col("k")).as("m")),
+        Seq("hash"), cap = None, saltAbove = None, saltGroups = 1)
+      .select(col("a.k").as("key_a"), col("b.k").as("key_b"), lit(0).as("hamming"))
     val star = members.filter(col("m") > cliqueCap && col("k") =!= col("rep"))
       .select(col("rep").as("key_a"), col("k").as("key_b"), lit(0).as("hamming"))
     // 2. cross-class candidates: small-class members + oversized reps
-    val joinSet = members.filter(col("m") <= cliqueCap).select(col("k"), col("hash"))
-      .unionByName(classes.filter(col("m") > cliqueCap)
-        .select(col("rep").as("k"), col("hash")))
-    val crossBanded = joinSet.select(col("k"), col("hash"),
-        explode(bandsOf(col("hash"))).as("bk"))
-      .select(col("k"), col("hash"), col("bk.band").as("band"), col("bk.bv").as("bv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // 3. band-cell frequency tiers (one linear count over the join
-    // set). The hot-cell set is bounded METADATA (at most 4n/saltAbove
-    // cells can exceed saltAbove), so probe it with a capped take
-    // (guide §8: decide with small rows, move heavy rows once):
-    //  - NO hot cell — the dispersed-after-rep-substitution common
-    //    case, incl. the degenerate modal corpus — the anti-join would
-    //    drop nothing and the salted mid tier is empty: build the cold
-    //    pairs straight off crossBanded, skipping two broadcast joins
-    //    and the whole salt-explode subtree (r17: the degenerate gate
-    //    spent ~1/3 of its 41 jobs materializing provably-empty
-    //    branches);
-    //  - ≤ 10k hot cells: join against a broadcast LocalRelation of
-    //    the collected set instead of re-materializing the frequency
-    //    aggregation once per consumer (the two broadcast(hotCells)
-    //    subtrees cannot share an exchange — their projections
-    //    differ);
-    //  - more (extreme-scale corpora): the original
-    //    aggregate-and-broadcast plan, unchanged.
-    // All three branches produce the identical pair set: the anti/semi
-    // joins partition crossBanded by the SAME hot-cell predicate.
-    val capThr = maxBandFreq.map(_.toLong).getOrElse(Long.MaxValue)
-    val hotAgg = crossBanded.groupBy(col("band"), col("bv")).count()
-      .filter(col("count") > saltAbove)
-      .select(col("band"), col("bv"), (col("count") > lit(capThr)).as("capped"))
-    val hotProbe = hotAgg.take(10001)
-    val (cold, midOpt) =
-      if (hotProbe.isEmpty) (crossBanded, None)
-      else if (hotProbe.length <= 10000) {
-        val spark = crossBanded.sparkSession
-        import spark.implicits._
-        val hotLocal = hotProbe.toSeq
-          .map(r => (r.getInt(0), r.getLong(1), r.getBoolean(2)))
-          .toDF("band", "bv", "capped")
-        val mid =
-          if (hotProbe.forall(_.getBoolean(2))) None // every hot cell capped
-          else Some(crossBanded.join(
-            broadcast(hotLocal.filter(!col("capped")).select("band", "bv")),
-            Seq("band", "bv"), "left_semi"))
-        (crossBanded.join(broadcast(hotLocal.select("band", "bv")),
-          Seq("band", "bv"), "left_anti"), mid)
-      } else {
-        (crossBanded.join(broadcast(hotAgg), Seq("band", "bv"), "left_anti"),
-          Some(crossBanded.join(
-            broadcast(hotAgg.filter(!col("capped")).select("band", "bv")),
-            Seq("band", "bv"), "left_semi")))
-      }
-    val coldPairs = cold.as("a")
-      .join(cold.as("b"),
-        col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
-          col("a.hash") =!= col("b.hash") && col("a.k") < col("b.k"))
-      .select(col("a.k").as("key_a"), col("b.k").as("key_b"),
-        bit_count(col("a.hash").bitwiseXOR(col("b.hash"))).as("hamming"))
-    val midPairsOpt = midOpt.map { mid =>
-      val g = saltGroups
-      val salted = mid
-        .withColumn("grp", pmod(hash(col("k")), lit(g)).cast("int"))
-        .withColumn("t", explode(array((0 until g).map(j =>
-          struct(least(col("grp"), lit(j)).as("ti"),
-            greatest(col("grp"), lit(j)).as("tj"))): _*)))
-      salted.as("a").join(salted.as("b"),
-          col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
-            col("a.hash") =!= col("b.hash") && col("a.t") === col("b.t") &&
-            col("a.k") < col("b.k") &&
-            when(col("a.t.ti") === col("a.t.tj"),
-              col("a.grp") === col("b.grp"))
-              .otherwise(col("a.grp") =!= col("b.grp")))
-        .select(col("a.k").as("key_a"), col("b.k").as("key_b"),
-          bit_count(col("a.hash").bitwiseXOR(col("b.hash"))).as("hamming"))
-    }
-    val cross = midPairsOpt.fold(coldPairs)(coldPairs.unionByName(_))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-    val result = clique.unionByName(star).unionByName(cross)
-    materializeAndRelease(result, sigs, classes, small, crossBanded)
+    materializeAndRelease(
+      clique.unionByName(star).unionByName(cellPairs(joinSet)), sigs)
   }
 
   /**
@@ -688,34 +636,20 @@ object Dedup {
    * (band, bv, freq) cells the given configuration DROPS, i.e. the
    * exact recall liability of a `maxBandFreq` run — a candidate pair
    * is missed iff ALL of its agreeing bands appear here. Frequencies
-   * are measured over the same cross-join set the tiered path builds
+   * are measured over the detector's own cell-candidate set
    * (small-class members plus one representative per > `cliqueCap`
    * identical-hash class, nulls dropped), NOT the raw corpus: an
    * oversized class contributes ONE row per cell, so a raw-corpus
-   * histogram would overstate cell heat and disclose cells the join
-   * never actually drops. Empty when the corpus routes to the fast
-   * path (capping exists only past `saltAbove`, and the fast path
-   * requires every cell ≤ `saltAbove`).
+   * histogram would overstate cell heat and disclose cells the
+   * detector never actually drops. Empty when the corpus skips the
+   * class tier (that requires every cell ≤ `saltAbove`, below any cap).
    */
   def cappedCells(hashes: DataFrame, cliqueCap: Int = 1000,
                   saltAbove: Int = 8192,
                   maxBandFreq: Int = 100000): DataFrame = {
-    def bandsOf(c: Column) = array((0 until 4).map(j => struct(lit(j).as("band"),
-      shiftrightunsigned(c, j * 16).bitwiseAND(lit(0xFFFFL)).as("bv"))): _*)
-    // mirrors the tiered path's joinSet construction (kept in lockstep
-    // with hammingNearDups — the disclosure must count what the join
-    // counts)
-    val base = hashes.filter(col("hash").isNotNull)
-      .select(col("k"), col("hash"))
-    val classes = base.groupBy(col("hash"))
-      .agg(min(col("k")).as("rep"), count(lit(1)).as("m"))
-    val members = base.join(classes, Seq("hash"))
-    val joinSet = members.filter(col("m") <= cliqueCap).select(col("k"), col("hash"))
-      .unionByName(classes.filter(col("m") > cliqueCap)
-        .select(col("rep").as("k"), col("hash")))
-    joinSet.select(explode(bandsOf(col("hash"))).as("bk"))
-      .select(col("bk.band").as("band"), col("bk.bv").as("bv"))
-      .groupBy(col("band"), col("bv")).agg(count(lit(1)).as("freq"))
+    val (_, joinSet) = hashClasses(
+      hashes.filter(col("hash").isNotNull).select(col("k"), col("hash")), cliqueCap)
+    bucketFreqs(cellRows(joinSet), Seq("band", "bv"))
       .filter(col("freq") > saltAbove && col("freq") > maxBandFreq)
   }
 
@@ -791,8 +725,8 @@ object Dedup {
   /**
    * Embedding near-dup pairs via random-hyperplane LSH: `numPlanes`
    * sign bits split into `bands` bands; same-band-value vectors become
-   * candidates, verified by exact cosine. The 100 TB path: shuffle on
-   * (band, value), never all-pairs.
+   * candidates through [[bucketPairs]], verified by exact cosine. The
+   * 100 TB path: shuffle on (band, value), never all-pairs.
    *
    * @param dim embedding dimensionality; defaults to -1 = infer from
    *            the first row (one LIMIT-1 probe — cheap, and wrong-dim
@@ -815,16 +749,11 @@ object Dedup {
       .withColumn("sig", signBits(col("v"), planes))
     val bandStructs = array((0 until bands).map(j => struct(lit(j).as("band"),
       shiftrightunsigned(col("sig"), j * bitsPerBand).bitwiseAND(lit(mask)).as("bv"))): _*)
-    // persist before the self-join (same hygiene as minhashNearDups):
-    // without it both join sides re-evaluate the sign-bit pipeline
-    val banded = base.select(col("k"), col("v"), col("sig"),
+    val members = base.select(struct(col("k"), col("v")).as("m"),
         explode(bandStructs).as("bk"))
-      .select(col("k"), col("v"), col("bk.band").as("band"), col("bk.bv").as("bv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val result = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
-          col("a.k") < col("b.k"))
+      .select(col("bk.band").as("band"), col("bk.bv").as("bv"), col("m"))
+    val result = bucketPairs(members, Seq("band", "bv"), cap = None,
+        saltAbove = None, saltGroups = 1)
       .select(col("a.k").as("key_a"), col("b.k").as("key_b"),
         col("a.v").as("va"), col("b.v").as("vb"))
       .distinct()
@@ -832,7 +761,7 @@ object Dedup {
       .filter(col("cosine") >= minCosine)
       .select(col("key_a").cast("string").as("key_a"),
         col("key_b").cast("string").as("key_b"), col("cosine"))
-    materializeAndRelease(result, banded)
+    materializeAndRelease(result)
   }
 
   // ---- transitive duplicate resolution (connected components) ---- //

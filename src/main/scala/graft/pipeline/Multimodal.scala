@@ -475,7 +475,7 @@ object Multimodal {
    * pigeonhole construction applied to [[imageHashes]]: the 64-bit
    * dHash splits into 4 disjoint 16-bit bands; a pair within Hamming
    * distance ≤ 3 MUST agree on at least one whole band, so candidates
-   * come from 4 exact band-key self-joins (shuffle on (band, key) —
+   * come from the 4 band-key cells (one shuffle on (band, key) —
    * never an all-pairs product) and the verified Hamming distance
    * filters exactly. Guaranteed-total recall for maxHamming ≤ 3; above
    * that the band join is a (documented) candidate generator.

@@ -139,8 +139,9 @@ object HundredSweep {
       graft.pipeline.Dedup.minhashNearDups(
         spark.read.parquet(s"$dir/documents.parquet"), "doc_id", "text",
         shingleN = 2, numHashes = 128, bands = 16, threshold = 0.85).count()
-    // The gate's SHARP oracle banding (4 rows/band, τ=0.5): SharpProbe
-    // measured 2.43e9 banded pair rows at 100×, 88% from 329 buckets
+    // The gate's SHARP oracle banding (4 rows/band, τ=0.5): STATUS.md
+    // ("Round 11 — staged LSH verify + the REAL sharp-config
+    // bottleneck") records 2.43e9 banded pair rows at 100×, 88% from 329 buckets
     // of >1000 members (common-shingle-correlated minima — max bucket
     // 28,649 docs ⇒ 4.1e8 pairs from ONE bucket, all J≈0.05 rejects).
     // The r11 maxBandFreq hot-bucket cap drops those buckets from

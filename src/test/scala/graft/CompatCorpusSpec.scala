@@ -61,7 +61,10 @@ class CompatCorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     server = new RespServer(new RespCommands(engine, cmds))
     port = server.start()
   }
-  override def afterAll(): Unit = if (server != null) server.stop()
+  override def afterAll(): Unit = {
+    closeConns()
+    if (server != null) server.stop()
+  }
 
   // ---- fixture loading (tagged JSON: see dev/compat_export.py) ----
 
@@ -270,10 +273,23 @@ class CompatCorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     * a single serial connection made this suite 64 of the full run's
     * 74 minutes), and RESP connections cannot be shared mid-reply. */
   private val conns = new ThreadLocal[(Socket, OutputStream, InputStream)]
+  /** Every socket `cmd` opened: a pool thread's ThreadLocal dies with
+    * the thread but its socket does not, so each replay closes them all
+    * when it ends (a later `cmd` on a closed socket reconnects). */
+  private val opened = java.util.concurrent.ConcurrentHashMap.newKeySet[Socket]()
+  private def closeConns(): Unit = {
+    val it = opened.iterator()
+    while (it.hasNext) {
+      val s = it.next()
+      it.remove()
+      try s.close() catch { case _: java.io.IOException => () }
+    }
+  }
   private def cmd(args: Any*): Any = {
     var c = conns.get()
     if (c == null || c._1.isClosed) {
       val s = new Socket("127.0.0.1", port)
+      opened.add(s)
       c = (s, new BufferedOutputStream(s.getOutputStream),
         new BufferedInputStream(s.getInputStream))
       conns.set(c)
@@ -528,7 +544,17 @@ class CompatCorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
         }})
       }
       tasks.foreach(_.get()) // barrier: the next group swaps currentDocs
-    } finally pool.shutdown()
+    } catch { case t: Throwable =>
+      // a rethrowing .get() leaves tasks queued or in flight: cancel
+      // them, and unblock their socket reads by closing the sockets
+      pool.shutdownNow()
+      closeConns()
+      throw t
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(1, java.util.concurrent.TimeUnit.MINUTES)
+      closeConns()
+    }
     (total.get(), failures.toMap, samples.toSeq, knownDeltas.get())
   }
 

@@ -339,6 +339,39 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(plain.exists(p => p._1 == "1" && p._2 == "2"))
   }
 
+  test("bucketPairs emits exactly the all-pairs-per-bucket multiset (skewed buckets, caps, salting)") {
+    val sp = spark; import sp.implicits._
+    // skewed: bucket 0 takes ~1/3 of the rows, bucket 1 ~1/6, the rest
+    // spread over 30 small buckets; a few null keys and repeated keys
+    // (both count toward a bucket's size but never pair)
+    val rnd = new scala.util.Random(29)
+    val rows = (0 until 360).map { i =>
+      val b = rnd.nextInt(6) match {
+        case 0 | 1 => 0
+        case 2 => 1
+        case _ => 2 + rnd.nextInt(30)
+      }
+      (b, if (i % 41 == 0) None else Some(rnd.nextInt(300).toLong))
+    }
+    val df = rows.toDF("b", "k").select(col("b"), struct(col("k")).as("m"))
+    def model(cap: Option[Int]): Map[(Long, Long), Int] =
+      rows.groupBy(_._1).values
+        .filter(_.size <= cap.getOrElse(Int.MaxValue))
+        .flatMap(rs => for ((_, Some(a)) <- rs; (_, Some(b)) <- rs if a < b) yield (a, b))
+        .groupBy(identity).map { case (p, ps) => p -> ps.size }
+    val binding = Some(40) // drops buckets 0 and 1, keeps the tail
+    assert(model(binding).nonEmpty && model(binding).size < model(None).size)
+    for (cap <- Seq(None, binding); salt <- Seq(None, Some(1)); g <- Seq(1, 4, 64)) {
+      val got = Dedup.bucketPairs(df, Seq("b"), cap, salt, g)
+        .select(col("a.k"), col("b.k")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+        .groupBy(identity).map { case (p, ps) => p -> ps.size }
+      val want = model(cap)
+      assert(got == want, s"cap=$cap saltAbove=$salt g=$g: " +
+        s"missing=${(want.toSet -- got.toSet).take(5)} extra=${(got.toSet -- want.toSet).take(5)}")
+    }
+  }
+
   test("ngram jaccard over a persisted input: identical rows, one scan of the cache") {
     val sp = spark; import sp.implicits._
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
