@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -526,6 +527,72 @@ case class MinHashSig(child: Expression, a: Array[Long], b: Array[Long])
 }
 
 /**
+ * LSH band keys of a MinHash signature in ONE row-local JVM loop:
+ * array<long> → array<struct<band:int, bh:long>>, one element per band
+ * j, with bh = xxhash64(j, concat_ws(",", slice(sig, j·r + 1, r))) —
+ * bit-identical to that Column formula (Spark's seed 42: the hash of
+ * int j seeds the hash of the comma-joined decimal digits). The
+ * Column form unrolls `bands` cast/join/hash branches (~300 KB of
+ * generated Java at 32 bands). `concat_ws` skips nulls, so a null
+ * signature hashes every band over the empty string and null elements
+ * are skipped; the result is never null.
+ */
+case class BandKeys(child: Expression, bands: Int, rowsPerBand: Int)
+    extends UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"band_keys needs array<bigint>, got ${t.simpleString}")
+  }
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("band", IntegerType, nullable = false),
+    StructField("bh", LongType, nullable = false))), containsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "band_keys"
+
+  override def eval(input: InternalRow): Any =
+    keys(child.eval(input).asInstanceOf[ArrayData])
+
+  /** Called from generated code; `sig` may be null. */
+  def keys(sig: ArrayData): ArrayData = {
+    val n = if (sig == null) 0 else sig.numElements()
+    val joined = new java.lang.StringBuilder
+    val out = new Array[Any](bands)
+    var j = 0
+    while (j < bands) {
+      joined.setLength(0)
+      var i = j * rowsPerBand
+      val end = math.min(n, i + rowsPerBand)
+      while (i < end) {
+        if (!sig.isNullAt(i)) {
+          if (joined.length > 0) joined.append(',')
+          joined.append(sig.getLong(i))
+        }
+        i += 1
+      }
+      val bytes = joined.toString.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+      out(j) = InternalRow(j, XXH64.hashUnsafeBytes(bytes,
+        org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, bytes.length, XXH64.hashInt(j, 42L)))
+      j += 1
+    }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    val ref = ctx.addReferenceObj("bandKeysExpr", this, classOf[BandKeys].getName)
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      |${c.code}
+      |ArrayData ${ev.value} = $ref.keys(${c.isNull} ? null : ${c.value});
+      """.stripMargin, isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(c: Expression) = copy(child = c)
+}
+
+/**
  * Word n-gram shingling + 64-bit hashing in ONE row-local JVM loop:
  * array<string> of words → sorted-distinct array<long> where each
  * element is FNV-1a 64 of the space-joined n-gram — bit-identical to
@@ -625,6 +692,57 @@ case class WordNgrams(child: Expression, n: Int)
     }
     org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
       seen.toArray(new Array[UTF8String](seen.size)))
+  }
+
+  override protected def withNewChildInternal(c: Expression) = copy(child = c)
+}
+
+/**
+ * DSIR hashed-n-gram buckets in ONE row-local JVM loop: array<string>
+ * of words (empties skipped) → array<int> holding every unigram's
+ * bucket, then every adjacent `a + " " + b` bigram's, where a gram's
+ * bucket is its first 4 md5 bytes (unsigned, big-endian) mod
+ * `nBuckets` — the value of `pmod(conv(substring(md5(g), 1, 8), 16,
+ * 10), nBuckets)`, so the DuckDB oracle reproduces it bit-for-bit.
+ * Replaces a `filter` + `zip_with` + `transform` HOF chain that ran
+ * interpreted lambdas and a hex/decimal string round trip per gram.
+ */
+case class DsirBuckets(child: Expression, nBuckets: Int)
+    extends UnaryExpression with UnaryRefEval {
+  require(nBuckets > 0, s"nBuckets must be > 0, got $nBuckets")
+
+  // containsNull: the type dsirBuckets has always declared (pmod is nullable)
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = true)
+  override def prettyName: String = "dsir_buckets"
+
+  override def nullSafeEval(v: Any): Any = {
+    val arr = v.asInstanceOf[ArrayData]
+    val cnt = arr.numElements()
+    val words = new java.util.ArrayList[Array[Byte]](cnt)
+    var i = 0
+    while (i < cnt) {
+      val w = arr.getUTF8String(i)
+      if (w.numBytes() > 0) words.add(w.getBytes)
+      i += 1
+    }
+    val m = words.size
+    val out = new Array[Int](if (m == 0) 0 else 2 * m - 1)
+    val md = java.security.MessageDigest.getInstance("MD5")
+    i = 0
+    while (i < out.length) {
+      if (i < m) md.update(words.get(i))
+      else {
+        md.update(words.get(i - m))
+        md.update(' '.toByte)
+        md.update(words.get(i - m + 1))
+      }
+      val d = md.digest()
+      val h = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
+        ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
+      out(i) = (h % nBuckets).toInt
+      i += 1
+    }
+    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
   }
 
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
@@ -1854,6 +1972,14 @@ case class GopherCounts(child: Expression)
  * the struct once per conjunct). The child IS deterministic — results
  * are bit-identical; only plan shape changes. Use on expensive
  * struct-producing expressions whose fields feed a filter.
+ *
+ * Allowed contexts (EvalOnceSpec): a projected column, read by a Filter
+ * above it, persisted, joined or grouped on ANOTHER key. Spark treats
+ * the barrier as nondeterministic, so as a join key it fails analysis
+ * with INVALID_NON_DETERMINISTIC_EXPRESSIONS, and as a grouping key the
+ * plan is rejected with "Non-deterministic expression … should not
+ * appear in grouping expression": project it first and key on the
+ * column.
  */
 case class EvalOnce(child: Expression) extends UnaryExpression {
   override lazy val deterministic: Boolean = false

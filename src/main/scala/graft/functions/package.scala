@@ -52,6 +52,9 @@ package object functions {
   /** MinHash signature of an array<string> shingle column. */
   def minhash_sig(shingles: Column, a: Array[Long], b: Array[Long]): Column =
     expr2col(MinHashSig(col2expr(shingles), a, b))
+  /** LSH (band, bh) keys of a MinHash signature (one JVM loop). */
+  def band_keys(sig: Column, bands: Int, rowsPerBand: Int): Column =
+    expr2col(BandKeys(col2expr(sig), bands, rowsPerBand))
   /** b-bit minwise sketch: low byte per signature component. */
   def sig_pack_bytes(sig: Column): Column =
     expr2col(SigPackBytes(col2expr(sig)))
@@ -67,6 +70,9 @@ package object functions {
   /** Distinct space-joined word n-gram STRINGS (one JVM loop). */
   def word_ngrams(words: Column, n: Int): Column =
     expr2col(WordNgrams(col2expr(words), n))
+  /** DSIR unigram+bigram md5 buckets of a word array (one JVM loop). */
+  def dsir_buckets(words: Column, nBuckets: Int): Column =
+    expr2col(DsirBuckets(col2expr(words), nBuckets))
   /** TAG tokenization (split/trim/fold/drop-empties, one JVM pass). */
   def tags_of(s: Column, sep: String, caseSensitive: Boolean): Column =
     expr2col(TagsOf(col2expr(s), sep, caseSensitive))

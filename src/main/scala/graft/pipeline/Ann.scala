@@ -70,10 +70,13 @@ object Ann {
     // for); the float column is read back solely for the ≤ k·rerank
     // candidate keys via the broadcast join below, mirroring
     // [[knnJoinSq]]. Null codes (null distance) are filtered: they can
-    // never be neighbors and must not occupy candidate slots.
+    // never be neighbors and must not occupy candidate slots. eval_once
+    // keeps that filter above the projection, so the distance is not
+    // computed a second time inside it.
     val cands = quantized
       .select(col(keyCol).cast("string").as("__key"),
-        graft.functions.sq_distance(col("__sq"), q, metric).as("__qd"))
+        graft.functions.eval_once(
+          graft.functions.sq_distance(col("__sq"), q, metric)).as("__qd"))
       .filter(col("__qd").isNotNull)
       .orderBy(col("__qd").asc, col("__key").asc)
       .limit(math.max(k, k * rerank))
@@ -304,9 +307,11 @@ object Ann {
     require(rerank >= 1, "rerank must be >= 1")
     val (lut, offsets, addConst) = pqLut(model, query, metric)
     val q = lit(query).cast(ArrayType(FloatType))
+    // eval_once: the null filter below must not recompute the ADC sum
     val cands = encoded
       .select(col(keyCol).cast("string").as("__key"),
-        graft.functions.pq_adc(col("__pq"), lut, offsets, addConst)
+        graft.functions.eval_once(
+          graft.functions.pq_adc(col("__pq"), lut, offsets, addConst))
           .as("__qd"))
       .filter(col("__qd").isNotNull)
       .orderBy(col("__qd").asc, col("__key").asc)

@@ -418,24 +418,12 @@ object Curation {
   /** Hashed unigram+bigram feature buckets of `text`: lowercase
     * alphanumeric tokens; bucket = first 8 md5 hex digits mod B (md5
     * so the DuckDB oracle reproduces buckets bit-for-bit, the
-    * [[sampleByHash]] convention). Codegen'd HOFs, map-only. */
-  def dsirBuckets(text: Column, nBuckets: Int): Column = {
-    val words = filter(split(lower(text), "[^a-z0-9]+"), w => length(w) > 0)
-    // Bigrams via zip_with(words, words[2..]) so every lambda touches
-    // ONLY its own elements: referencing `words` (an unbound filter/
-    // split tree) through element_at inside a transform lambda defeats
-    // subexpression elimination — the text re-splits per bigram
-    // element, O(tokens²)/doc (measured: 16 s for the sf0.1 gate;
-    // this form: sub-second). zip_with pads the shorter side with
-    // null → concat yields null → filtered.
-    val bis = filter(
-      zip_with(words, slice(words, lit(2), greatest(size(words) - 1, lit(0))),
-        (a, b) => concat(a, lit(" "), b)),
-      x => x.isNotNull)
-    transform(concat(words, bis), g =>
-      pmod(conv(substring(md5(g), 1, 8), 16, 10).cast("long"),
-        lit(nBuckets.toLong)).cast("int"))
-  }
+    * [[sampleByHash]] convention). Tokenization stays in Catalyst
+    * (`split(lower(text), "[^a-z0-9]+")`); dropping empty words, forming
+    * the unigrams then bigrams and hashing each gram is one native call
+    * per row ([[graft.functions.DsirBuckets]]). Map-only. */
+  def dsirBuckets(text: Column, nBuckets: Int): Column =
+    graft.functions.dsir_buckets(split(lower(text), "[^a-z0-9]+"), nBuckets)
 
   /** Bucket histogram of a corpus: B counts on the driver (this is the
     * MODEL — B ≈ 10⁴ longs — not data). One agg with map-side partial

@@ -117,12 +117,14 @@ object Dedup {
   /**
    * LSH banding: emit (bandIdx, bandHash) per band; docs sharing any
    * band bucket become candidate pairs. bands × rowsPerBand must equal
-   * the signature length.
+   * the signature length. Band j hashes as
+   * `xxhash64(j, concat_ws(",", slice(sig, j·rowsPerBand + 1, rowsPerBand)))`,
+   * computed for all bands in one native call per row
+   * ([[graft.functions.BandKeys]]); the Column formula unrolled one
+   * cast/join/hash branch per band into the generated code.
    */
   def bandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map(j => struct(lit(j).as("band"),
-      xxhash64(lit(j), concat_ws(",", slice(sig, j * rowsPerBand + 1, rowsPerBand)))
-        .as("bh"))): _*)
+    graft.functions.band_keys(sig, bands, rowsPerBand)
 
   /** Sentinel for [[minhashNearDups]]' `maxBandFreq`: derive the cap
     * from the corpus' own band-bucket histogram (see the hot-bucket
@@ -171,10 +173,15 @@ object Dedup {
     math.min(cap, Int.MaxValue.toLong).toInt
   }
 
-  /** (k, sh) rows: a document key and its hashed shingles. */
+  /** (k, sh) rows: a document key and its hashed shingles. The shingle
+    * hashing runs under `eval_once`, so a filter later placed on `sh`
+    * or `k` stays above this projection: pushed below it (and below a
+    * widening exchange), it would re-hash the text once per reference
+    * (`explode(sh)` infers `size(sh) > 0 AND isnotnull(sh)`). */
   private def shingled(df: DataFrame, keyCol: String, textCol: String,
                        shingleN: Int): DataFrame =
-    df.select(col(keyCol).as("k"), hashedShingles(col(textCol), shingleN).as("sh"))
+    df.select(col(keyCol).as("k"),
+      graft.functions.eval_once(hashedShingles(col(textCol), shingleN)).as("sh"))
 
   /** (k, sig, sz) rows of a (k, sh) relation: the MinHash signature and
     * the shingle-set size. */
@@ -677,9 +684,11 @@ object Dedup {
   def simhashNearDups(df: DataFrame, keyCol: String, textCol: String,
                       maxHamming: Int = 3, cliqueCap: Int = 1000,
                       maxBandFreq: Option[Int] = Some(100000)): DataFrame = {
+    // eval_once: hammingNearDups' null-hash filter would otherwise sink
+    // below the projection with simhash64 inlined into it
     val sigs = withSimhash64(
       df.select(col(keyCol).as("k"), col(textCol)),
-      textCol, "sim").select(col("k"), col("sim").as("hash"))
+      textCol, "sim").select(col("k"), graft.functions.eval_once(col("sim")).as("hash"))
     hammingNearDups(sigs, maxHamming, cliqueCap = cliqueCap,
         maxBandFreq = maxBandFreq)
       .select(col("key_a").cast("string").as("key_a"),
@@ -997,10 +1006,13 @@ object Dedup {
   def duplicatedWindows(df: DataFrame, keyCol: String, textCol: String,
                         minTokens: Int = 50): DataFrame = {
     require(minTokens >= 1, s"minTokens must be >= 1, got $minTokens")
+    // eval_once: the posexplode's inferred non-empty filter on `__hs`
+    // would otherwise sink below this projection, hashing each text
+    // three times
     val win = graft.util.Parallelism.ensure(df)
       .select(col(keyCol).cast("string").as("__key"),
-        graft.functions.token_window_hashes(
-          split(col(textCol), " "), minTokens).as("__hs"))
+        graft.functions.eval_once(graft.functions.token_window_hashes(
+          split(col(textCol), " "), minTokens)).as("__hs"))
       .select(col("__key"), posexplode(col("__hs")).as(Seq("__pos", "__wh")))
     val dup = win.groupBy("__wh")
       .agg(count(lit(1)).as("__n"),

@@ -190,12 +190,21 @@ object TextMetrics {
   }
 
   /** Keep only documents passing every Gopher rule. */
-  // not widened (Parallelism.ensure): the rules struct feeds a FILTER,
-  // which Catalyst pushes below any inserted exchange — the compute
-  // would stay single-task and the exchange is pure cost
+  // The rules struct is computed once per row, in a projection under
+  // eval_once, and the filter reads its `pass` field: a filter on the
+  // bare struct field inlines gopher_counts 21× into the Filter
+  // condition (FilterExec does no common-subexpression elimination).
+  // Not widened (Parallelism.ensure): with one evaluation per row the
+  // remaining compute is cheaper than the exchange and its AQE round,
+  // as r17 measured for the same barrier in p_pipeline_quality_e2e.
   def gopherFilter(df: DataFrame, textCol: String,
-                   minWords: Int = 50, maxWords: Int = 100000): DataFrame =
-    df.filter(gopherRules(col(textCol), minWords, maxWords).getField("pass"))
+                   minWords: Int = 50, maxWords: Int = 100000): DataFrame = {
+    val g = "__gopher_rules"
+    df.withColumn(g, graft.functions.eval_once(
+        gopherRules(col(textCol), minWords, maxWords)))
+      .filter(col(g).getField("pass"))
+      .drop(g)
+  }
 
   /** Gopher duplicate word-n-gram measurements (Rae et al. 2021 table
     * A1): `top_{2,3,4}gram_char_frac` + `dup_{5..10}gram_char_frac` as

@@ -44,6 +44,14 @@ class DsirSpec extends AnyFunSuite {
     }
   }
 
+  test("dsirBuckets: a null text gives a null array, as the split it starts from") {
+    val sp = spark; import sp.implicits._
+    val got = Seq(Some("alpha beta"), None).toDF("t")
+      .select(Curation.dsirBuckets(col("t"), B).as("b"))
+      .collect().map(r => Option(r.getSeq[Int](0)).map(_.toSeq))
+    assert(got.toSeq == Seq(Some(bucketsOf("alpha beta")), None))
+  }
+
   test("dsirLogRatio: add-1 smoothed, unseen buckets finite, known value") {
     val t = Array(3L, 0L); val r = Array(1L, 1L)
     val lr = Curation.dsirLogRatio(t, r)

@@ -1,7 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+import org.apache.spark.sql.execution.{FilterExec, FormattedMode, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -184,5 +188,66 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("q_tag_prefix: any_prefix_match Filter stays codegen'd") {
     assertFilterCodegen("q_tag_prefix", "any_prefix_match(")
+  }
+
+  /** A small parquet corpus: a FILE source, not a LocalRelation, whose
+    * projections and filters ConvertToLocalRelation would fold away at
+    * planning time. One file, so Parallelism.ensure widens it. */
+  private lazy val corpus: DataFrame = {
+    val sp = spark; import sp.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("planshape").toString
+    (0 until 300).map { i =>
+      (i.toLong, s"the cat sat with the hat and ten $i more words " * (1 + i % 5))
+    }.toDF("id", "t").write.mode("overwrite").parquet(tmp)
+    spark.read.parquet(tmp)
+  }
+
+  /** The physical operators (AQE's initial plan: exchanges placed, no
+    * stage executed) whose expressions hold an expression of the named
+    * class — matched by name, so the pins read the same on any build. */
+  private def physical(df: DataFrame): SparkPlan = df.queryExecution.executedPlan match {
+    case a: AdaptiveSparkPlanExec => a.initialPlan
+    case o => o
+  }
+  private def opsWith(df: DataFrame, exprClass: String): Seq[SparkPlan] =
+    physical(df).collect { case n if n.expressions.exists(
+      _.exists(_.getClass.getSimpleName == exprClass)) => n }
+
+  test("curate kernels evaluate once per row: gopherFilter") {
+    val kept = pipeline.TextMetrics.gopherFilter(corpus, "t", minWords = 5)
+    val ops = opsWith(kept, "GopherCounts")
+    assert(ops.size == 1, s"gopher_counts in ${ops.map(_.nodeName)}")
+    assert(!ops.exists(_.isInstanceOf[FilterExec]),
+      "gopher_counts inlined into a Filter condition")
+    val bare = corpus.filter(
+      pipeline.TextMetrics.gopherRules(col("t"), minWords = 5).getField("pass"))
+    assert(kept.columns.toSeq == corpus.columns.toSeq)
+    assert(kept.collect().map(_.toString).sorted.toSeq ==
+      bare.collect().map(_.toString).sorted.toSeq)
+  }
+
+  test("curate kernels evaluate once per row: ngramJaccardPairs") {
+    val ops = opsWith(pipeline.Dedup.ngramJaccardPairs(corpus, "id", "t"), "HashedShingles")
+    assert(ops.size == 1, s"hashed_shingles in ${ops.map(_.nodeName)}")
+    assert(ops.head.exists {
+      case e: ShuffleExchangeExec => e.outputPartitioning.isInstanceOf[RoundRobinPartitioning]
+      case _ => false
+    }, s"hashed_shingles is not above the widening exchange:\n${ops.head}")
+  }
+
+  test("curate kernels evaluate once per row: one band-key call per MinHash band row") {
+    // the band relation of Dedup.minhashNearDups: (k, sig) → one row per
+    // (band, bh) bucket
+    val bands = corpus
+      .select(col("id").as("k"), pipeline.Dedup.minhashSignature(
+        pipeline.Dedup.hashedShingles(col("t"), 2), 128).as("sig"))
+      .select(struct(col("k")).as("m"),
+        explode(pipeline.Dedup.bandKeys(col("sig"), 32, 4)).as("bk"))
+      .select(col("bk.band").as("band"), col("bk.bh").as("bh"), col("m"))
+    val p = physical(bands)
+    val exprs = p.collect { case n => n.expressions }.flatten.flatMap(_.collect { case e => e })
+    assert(exprs.count(_.prettyName == "band_keys") == 1, p.toString)
+    assert(!exprs.exists(e => Set("ConcatWs", "XxHash64").contains(e.getClass.getSimpleName)),
+      s"a concat_ws/xxhash64 band tree is back:\n$p")
   }
 }
