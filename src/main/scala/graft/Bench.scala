@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /**
  * Driver benchmark entrypoint: one JSON line with the per-query MEDIAN
  * of `reps` timed runs (after one untimed warm-up run per query), so
@@ -22,16 +24,62 @@ package graft
  *    spike is a session stall, not a plan regression.
  */
 object Bench {
+  /** The gates' data directory. */
+  def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  // median of 5: up to two session stalls (GC, broadcast cleanup)
+  // cannot own a query's reported number
+  def reps: Int = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt
+
+  /** The bench session. SPARK_GRAFT_MASTER=local-cluster[4,8,4096]
+    * benches the same query set multi-JVM (see graft.util.GraftSession). */
+  def session(): SparkSession = graft.util.GraftSession.builder()
+    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    .getOrCreate()
+
+  /** Sum of JVM GC wall time (all collectors), monotonic. */
+  def gcMillis(): Long = {
+    import scala.jdk.CollectionConverters._
+    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
+      .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
+  }
+  /** Bytes of persisted blocks currently in storage memory — the
+    * accumulated-fixture-cache signal for stall adjudication. */
+  def storageBytes(spark: SparkSession): Long =
+    spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum
+
+  /** One timed run. Returns (elapsed sec, GC ms spent DURING the rep,
+    * storage bytes after, error). A failed rep's time is reported but
+    * never enters the median. The result handle is unpersisted so
+    * localCheckpoint blocks are released before the next rep. */
+  def timeOnce(spark: SparkSession, sfDir: String,
+               fn: Queries.Q): (Double, Long, Long, Option[String]) = {
+    val gc0 = gcMillis()
+    val t0 = System.nanoTime()
+    val err =
+      try { val df = fn(spark, sfDir); df.count(); df.unpersist(blocking = false); None }
+      catch { case e: Throwable =>
+        Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
+      }
+    ((System.nanoTime() - t0) / 1e9, gcMillis() - gc0, storageBytes(spark), err)
+  }
+
+  case class QResult(median: Double, repTimes: Seq[Double],
+                     gcMs: Seq[Long], storageMb: Seq[Long], err: Option[String])
+
+  /** The rep protocol of one gate: an untimed warm-up (caches, codegen,
+    * broadcast reuse), then `reps` timed runs; the median is over the
+    * runs that did not fail (-1 when none succeeded). */
+  def measure(spark: SparkSession, sfDir: String, fn: Queries.Q, reps: Int): QResult = {
+    timeOnce(spark, sfDir, fn)
+    val runs = Seq.fill(reps)(timeOnce(spark, sfDir, fn))
+    val ok = runs.collect { case (t, _, _, None) => t }.sorted
+    val firstErr = runs.collectFirst { case (_, _, _, Some(e)) => e }
+    val median = if (ok.nonEmpty) ok(ok.length / 2) else -1.0
+    QResult(median, runs.map(_._1), runs.map(_._2), runs.map(_._3 >> 20), firstErr)
+  }
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // median of 5: up to two session stalls (GC, broadcast cleanup)
-    // cannot own a query's reported number
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt
-    // SPARK_GRAFT_MASTER=local-cluster[4,8,4096] benches the same
-    // query set multi-JVM (see graft.util.GraftSession)
-    val spark = graft.util.GraftSession.builder()
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = session()
     spark.sparkContext.setLogLevel("WARN")
     // Warm-up: touch every table once so file listing / footer reads are
     // out of the timings, then build every index the query set uses
@@ -45,43 +93,8 @@ object Bench {
       }
     }
 
-    /** Sum of JVM GC wall time (all collectors), monotonic. */
-    def gcMillis(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
-    }
-    /** Bytes of persisted blocks currently in storage memory — the
-      * accumulated-fixture-cache signal for stall adjudication. */
-    def storageBytes(): Long =
-      spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum
-
-    /** One timed run. Returns (elapsed sec, GC ms spent DURING the rep,
-      * storage bytes after, error). A failed rep's time is reported but
-      * never enters the median. The result handle is unpersisted so
-      * localCheckpoint blocks are released before the next rep. */
-    def timeOnce(fn: Queries.Q): (Double, Long, Long, Option[String]) = {
-      val gc0 = gcMillis()
-      val t0 = System.nanoTime()
-      val err =
-        try { val df = fn(spark, sfDir); df.count(); df.unpersist(blocking = false); None }
-        catch { case e: Throwable =>
-          Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
-        }
-      ((System.nanoTime() - t0) / 1e9, gcMillis() - gc0, storageBytes(), err)
-    }
-
-    case class QResult(median: Double, repTimes: Seq[Double],
-                       gcMs: Seq[Long], storageMb: Seq[Long], err: Option[String])
-
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      timeOnce(fn) // untimed warm-up: caches, codegen, broadcast reuse
-      val runs = Seq.fill(reps)(timeOnce(fn))
-      val ok = runs.collect { case (t, _, _, None) => t }.sorted
-      val firstErr = runs.collectFirst { case (_, _, _, Some(e)) => e }
-      val median = if (ok.nonEmpty) ok(ok.length / 2) else -1.0
-      name -> QResult(median, runs.map(_._1), runs.map(_._2),
-        runs.map(_._3 >> 20), firstErr)
+      name -> measure(spark, sfDir, fn, reps)
     }
 
     def fmt(d: Double): String = f"$d%.4f"

@@ -211,7 +211,8 @@ class SearchEngine {
   private val keyLayouts = scala.collection.concurrent.TrieMap.empty[String, KeyPrefixLayout]
 
   // ---------------------------------------------------------------------
-  // Reply cache — the serving-floor lever (ServeLatencyProbe finding):
+  // Reply cache — the serving-floor lever (STATUS.md "Round 11 —
+  // serving-floor decomposition"):
   // a warm FT.SEARCH pays ~100 ms of per-call plan re-analysis and
   // persist bookkeeping on identical requests. The reference serves
   // repeats from its always-current in-memory index for free; the batch
@@ -296,10 +297,11 @@ class SearchEngine {
     }
 
   // ---------------------------------------------------------------------
-  // Filtered-base cache — the second serving lever (ServeLatencyProbe
-  // decomposition): the reply cache only serves EXACT repeats, but the
-  // expensive half of a non-vector reply — filterStage + limit(cap+1) +
-  // the total count — depends on strictly fewer inputs than the reply
+  // Filtered-base cache — the second serving lever (STATUS.md "Round 11
+  // — serving-floor decomposition"): the reply cache only serves EXACT
+  // repeats, but the expensive half of a non-vector reply — filterStage
+  // + limit(cap+1) + the total count — depends on strictly fewer inputs
+  // than the reply
   // (query, params, VERBATIM/SLOP/INORDER, the fetch cap; NOT the page
   // offset/limit, SORTBY, RETURN, NOCONTENT, WITHSORTKEYS). A client
   // paging through results, or re-requesting with different RETURN
@@ -1756,9 +1758,9 @@ class SearchEngine {
             // persist is dropped; bigger bases stay persisted and enter
             // the cache under the reader-refcounted CachedBase
             // lifecycle, so a paging client pays the corpus scan once
-            // and page latency is flat in corpus size (ServeScaleProbe
-            // contract). Failures (a SORTBY on an unknown field raises
-            // in finishSearch) always unpersist.
+            // and page latency is flat in corpus size (STATUS.md "Round
+            // 11 — serving at scale, measured"). Failures (a SORTBY on
+            // an unknown field raises in finishSearch) always unpersist.
             val bound = math.min(cap, baseCacheMaxRows)
             // The base materializes REPLY columns only: the key, the
             // source attributes, and the preserved raws (content
@@ -1767,8 +1769,10 @@ class SearchEngine {
             // filterStage already applied — carrying them through the
             // persist would re-tokenize and store every matched
             // document's text (measured 4.5× the raw scan floor at the
-            // 100× corpus; ColdFloorProbe). Dropping them here lets
-            // Catalyst prune the derivation out of the scan entirely.
+            // 100× corpus; STATUS.md "Round 13 — big-base serving
+            // restored + cold first-page adjudicated"). Dropping them
+            // here lets Catalyst prune the derivation out of the scan
+            // entirely.
             val replyCols = {
               val enriched = filterStage(schema, docs, parsed, opts, ep)
               val keep = enriched.columns.filter(c =>

@@ -442,10 +442,12 @@ object Dedup {
     val triangle = (for (i <- 0 until g; j <- i until g) yield (i, j)).toList
     val c = when(hot, ceil(n / g).cast("int")).otherwise(n)
     def sliceOf(u: String) = slice(col("ms"), col(u) * col("c") + 1, col("c"))
+    // eval_once: the posexplode's inferred non-empty filter on `xs` would
+    // otherwise sink below this projection and slice `ms` twice more
     val units = kept
       .select(col("ms"), c.as("c"),
         explode(when(hot, typedLit(triangle)).otherwise(typedLit(Seq((0, 0))))).as("u"))
-      .select(sliceOf("u._1").as("xs"),
+      .select(graft.functions.eval_once(sliceOf("u._1")).as("xs"),
         when(col("u._1") =!= col("u._2"), sliceOf("u._2")).as("ys"))
     // salting spreads a hot list's units over tasks: the list shuffle is
     // byte-small but its pair work quadratic, so AQE would coalesce it

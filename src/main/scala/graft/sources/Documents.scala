@@ -68,7 +68,8 @@ object Documents {
   //    driver-side local-relation fold (or any interpreted eval) race
   //    on the slot and corrupt each other's rows (found as a ~1/500
   //    missing-document flicker under concurrent serving +
-  //    maintenance; PureScanProbe reproduces it without the engine).
+  //    maintenance; STATUS.md "Round 11 — a real wrong-results race
+  //    found, root-caused, and fixed").
   //    Ingest-side projections must therefore stay lambda-free.
   private def textDerivedUdf(cfg: Analyzer.Config) =
     udf((s: String) =>

@@ -17,7 +17,8 @@ import org.apache.spark.sql.functions._
  *    signatures decorrelate, so the NEAR-DUP graph grows linearly
  *    (each replica's internal dups replicate; replicas don't
  *    cross-pair into 100-member cliques — the modal-corpus regime is
- *    separately stress-tested by DedupSweep/p_dedup_simhash_degenerate).
+ *    separately stress-tested by p_dedup_simhash_degenerate; STATUS.md
+ *    "Round 6 — dedup resolution at scale").
  *  - embeddings: replicas perturbed per element (deterministic hash
  *    noise, ±0.5%) so ANN structure is realistic rather than 100
  *    exact copies of every vector.

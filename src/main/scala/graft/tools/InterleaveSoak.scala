@@ -81,10 +81,6 @@ object InterleaveSoak {
     df.groupBy("term").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
 
-  /** [[EmptyPageProbe]] hook. */
-  def registerVersionPublic(spark: SparkSession, e: SearchEngine, v: Int): Unit =
-    registerVersion(spark, e, v, noDerived = false)
-
   /** One maintainer-style refresh: swap + full derived re-registration. */
   private def registerVersion(spark: SparkSession, e: SearchEngine, v: Int,
                               noDerived: Boolean): Unit = {

@@ -17,8 +17,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
  * 100 TB —
  *
  *  - interpreted Filter/Project (tree line without the `*` codegen
- *    marker): the exact regression class PlanAudit caught in round 10
- *    (HOF-lambda TAG filters outside whole-stage codegen, 2× slower);
+ *    marker): the exact regression class the round-10 plan audit
+ *    caught (HOF-lambda TAG filters outside whole-stage codegen, 2×
+ *    slower; STATUS.md "Round 10 — post-close: TagsOf expression
+ *    restores whole-stage codegen on every TAG path");
  *  - `lambdafunction` inside a condition (interpreted HOF on the hot
  *    path);
  *  - CartesianProduct / BroadcastNestedLoopJoin (quadratic joins);

@@ -50,8 +50,11 @@ object GraftSession {
       // pipeline keeps the scan's layout on purpose (see the
       // SearchEngine.aggregateStages NOT-widened comment) and the a_*
       // gates read non-resident indexes; the oracle re-checks this at
-      // both driver SFs every round.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", sys.env.getOrElse("SPARK_GRAFT_CACHED_AQE", "true"))
+      // both driver SFs every round. A constant, not a knob: six
+      // alternated pairs put both gates suspected of regressing under
+      // it inside pair noise (STATUS.md "Round 17 — delivered",
+      // "CACHED_AQE adjudicated").
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
     if (master.startsWith("local-cluster")) {
       // worker memory is the third bracket figure (MB); leave the
       // executor a margin under it for the worker's own accounting

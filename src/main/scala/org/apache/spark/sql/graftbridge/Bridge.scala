@@ -9,7 +9,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
  * `private[sql]`; this shim lives under `org.apache.spark.sql` to
  * re-export them to the graft packages (the standard pattern for
  * libraries providing custom Catalyst expressions), plus the one
- * `private[spark]` listener-bus drain the plan audit needs.
+ * `private[spark]` listener-bus drain the plan audit and the profiler
+ * need.
  */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

@@ -16,8 +16,8 @@ import graft.text.PostingIndex
  * LambdaFunction's NamedLambdaVariable value slot is shared by all
  * plans referencing the expression instance, and concurrent
  * interpreted evaluation (e.g. the optimizer's driver-side
- * local-relation fold) corrupts rows (see STATUS round 11 and
- * tools.PureScanProbe). Covers the enrichment of every field class —
+ * local-relation fold) corrupts rows (STATUS.md "Round 11 — a real
+ * wrong-results race found, root-caused, and fixed"). Covers the enrichment of every field class —
  * TEXT (suffix-trie), TAG, NUMERIC, string-sourced cosine VECTOR —
  * and every posting builder.
  */

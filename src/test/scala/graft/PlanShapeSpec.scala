@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Slice}
 import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
 import org.apache.spark.sql.execution.{FilterExec, FormattedMode, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -90,9 +91,10 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** The round-10 TagsOf win: TAG predicates must evaluate via the
     * codegen'd tags_of expression INSIDE the same whole-stage-codegen
-    * span as the scan. The regression PlanAudit caught (interpreted
-    * HOF lambdas forcing the Filter out of codegen) shows up here as
-    * either a `lambdafunction` in the condition or a Filter whose
+    * span as the scan. The regression the round-10 plan audit caught
+    * (interpreted HOF lambdas forcing the Filter out of codegen; STATUS.md
+    * "Round 10 — post-close: TagsOf expression restores whole-stage
+    * codegen on every TAG path") shows up here as either a `lambdafunction` in the condition or a Filter whose
     * codegen id differs from the scan's ColumnarToRow. */
   private def assertTagFilterFused(name: String): Unit = {
     val p = plan(name)
@@ -249,5 +251,22 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(exprs.count(_.prettyName == "band_keys") == 1, p.toString)
     assert(!exprs.exists(e => Set("ConcatWs", "XxHash64").contains(e.getClass.getSimpleName)),
       s"a concat_ws/xxhash64 band tree is back:\n$p")
+  }
+
+  test("a banded unit slices its member list once") {
+    // Dedup.bucketPairs' unit projection slices `ms` into `xs` (and `ys`);
+    // the posexplode of `xs` infers a non-empty filter that, pushed below
+    // the projection, would slice the list twice more per unit row
+    val members = corpus.select(struct(col("id").as("k")).as("m"),
+      explode(split(col("t"), " ")).as("s"))
+    val p = physical(pipeline.Dedup.bucketPairs(members, Seq("s"), None, None, 1))
+    val listSlices = p.collect { case n => n.expressions }.flatten.flatMap(_.collect {
+      case s @ Slice(a: AttributeReference, _, _) if a.name == "ms" => s
+    })
+    assert(listSlices.size == 2, s"${listSlices.size} slices of ms (xs + ys):\n$p")
+    assert(!p.exists {
+      case f: FilterExec => f.condition.exists(_.isInstanceOf[Slice])
+      case _ => false
+    }, s"a unit slice sank into a Filter:\n$p")
   }
 }
