@@ -1020,10 +1020,10 @@ object Queries {
       "q_reply_total_cold",
       (s: SparkSession, dir: String) => {
         val e = eng(s, dir)
-        val savedReply = e.replyCacheEnabled
-        val savedBase = e.baseCacheEnabled
-        e.replyCacheEnabled = false
-        e.baseCacheEnabled = false // q_reply_total warmed the base cache too
+        val savedReply = e.replyCache.maxEntries
+        val savedBase = e.baseCache.maxEntries
+        e.replyCache.maxEntries = 0
+        e.baseCache.maxEntries = 0 // q_reply_total warmed the base cache too
         try {
           val reply = e.searchReply("orders", "@o_orderstatus:{F}",
             SearchOptions(limit = (20, 30), sortBy = Some(("o_totalprice", true)),
@@ -1033,8 +1033,8 @@ object Queries {
             reply.rows.map(_.getString(0)).mkString(","))).toDF(
             "total", "page_len", "page_keys")
         } finally {
-          e.replyCacheEnabled = savedReply
-          e.baseCacheEnabled = savedBase
+          e.replyCache.maxEntries = savedReply
+          e.baseCache.maxEntries = savedBase
         }
       },
       """WITH m AS (SELECT CAST(o_orderkey AS VARCHAR) AS k, o_totalprice

@@ -87,9 +87,8 @@ object SearchEngine {
   /** A complete cached reply plus the per-call metric effects to replay
     * on a hit, so counters stay call-accurate (truncation + record
     * drops). */
-  private[engine] final case class CachedReply(indexName: String, epoch: Long,
-      reply: SearchReply, limited: Boolean, dropped: Long,
-      lastUsed: java.util.concurrent.atomic.AtomicLong)
+  private[engine] final case class CachedReply(reply: SearchReply,
+      limited: Boolean, dropped: Long)
 
   /** A materialized non-vector filter base. `local = true` entries are
     * driver-resident LocalRelations (bases within baseCacheMaxRows,
@@ -102,9 +101,7 @@ object SearchEngine {
     * (the r13 soak's AQE empty-propagation finding). `n` is the exact
     * row count, from which every page's total and truncation flag
     * derive. */
-  private[engine] final case class CachedBase(indexName: String, epoch: Long,
-      df: DataFrame, n: Long,
-      lastUsed: java.util.concurrent.atomic.AtomicLong,
+  private[engine] final case class CachedBase(df: DataFrame, n: Long,
       local: Boolean = true,
       dead: java.util.concurrent.atomic.AtomicBoolean =
         new java.util.concurrent.atomic.AtomicBoolean(false),
@@ -211,34 +208,27 @@ class SearchEngine {
   private val keyLayouts = scala.collection.concurrent.TrieMap.empty[String, KeyPrefixLayout]
 
   // ---------------------------------------------------------------------
-  // Reply cache — the serving-floor lever (STATUS.md "Round 11 —
-  // serving-floor decomposition"):
-  // a warm FT.SEARCH pays ~100 ms of per-call plan re-analysis and
-  // persist bookkeeping on identical requests. The reference serves
-  // repeats from its always-current in-memory index for free; the batch
-  // analogue is a bounded cache of COMPLETE non-vector replies, keyed by
-  // everything that can change the answer: index name + registration
-  // epoch, query string, the full option set (params canonicalized), and
-  // the mutable reply caps. Correctness rests on the r10 catalog
-  // contract: every results-affecting mutation goes through createIndex
-  // (maintainer batches, FT.CREATE over an existing name) or dropIndex —
-  // both bump the epoch and clear the index's entries, so a cached reply
-  // is valid for exactly one registration generation. Derived-state
-  // registrations (postings/stats/layouts) are results-invariant for the
-  // cached class (routing parity is fuzz-pinned); KNN replies are NOT
-  // cached (they depend on ANN registration and the hybrid planner's
-  // mutable threshold, and they bump planner counters per call).
+  // Reply caches — the serving-floor levers (STATUS.md "Round 11 —
+  // serving-floor decomposition"): a warm FT.SEARCH pays ~100 ms of
+  // per-call plan re-analysis and persist bookkeeping on identical
+  // requests. The reference serves repeats from its always-current
+  // in-memory index for free; the batch analogue is three bounded
+  // [[EpochCache]]s (complete FT.SEARCH replies, filtered bases,
+  // FT.AGGREGATE wire replies), each keyed by index name + registration
+  // epoch + [[cacheSettings]] + the request parts that can change the
+  // answer. Correctness rests on the r10 catalog contract: every
+  // results-affecting mutation goes through createIndex (maintainer
+  // batches, FT.CREATE over an existing name) or dropIndex — both call
+  // [[newEpoch]], which bumps the epoch and drops the index's entries
+  // from all three caches, so an entry is valid for exactly one
+  // registration generation. Derived-state registrations (postings/
+  // stats/layouts) are results-invariant for the cached classes
+  // (routing parity is fuzz-pinned). KNN searches bypass the reply and
+  // base caches (they depend on ANN registration and the hybrid
+  // planner's mutable threshold, and they bump planner counters per
+  // call); a KNN aggregate's front end is exact, so its wire reply
+  // caches like any other.
   // ---------------------------------------------------------------------
-  /** Serve repeated identical FT.SEARCH requests from a bounded reply
-    * cache (invalidated per index on createIndex/dropIndex). */
-  var replyCacheEnabled: Boolean = true
-  /** LRU bound on cached replies across all indexes. */
-  var replyCacheMaxEntries: Int = 256
-  /** Replies with more page rows than this are never cached (memory
-    * bound per entry; LIMIT-sized pages are far below it). */
-  var replyCacheMaxRows: Int = 10000
-  private[graft] val replyCacheHits = new java.util.concurrent.atomic.AtomicLong
-  private[graft] val replyCacheMisses = new java.util.concurrent.atomic.AtomicLong
   private val epochs = scala.collection.concurrent.TrieMap.empty[String, java.util.concurrent.atomic.AtomicLong]
   // read-only: a lookup for an unknown name must NOT insert (clients
   // probing arbitrary index names over the socket would grow the map
@@ -246,154 +236,100 @@ class SearchEngine {
   private def epochOf(name: String): Long =
     epochs.get(name).fold(0L)(_.get())
   /** Registration generation of an index — bumps on createIndex /
-    * dropIndex. Any cache keyed by an index's contents must carry it
-    * (the RESP adapter's aggregate-reply cache does). */
+    * dropIndex. Any cache keyed by an index's contents must carry it. */
   private[graft] def registrationEpoch(name: String): Long = epochOf(name)
-  // Ordering contract with the lookup path: searchReply reads the epoch
+  // Ordering contract with the lookup paths: a request reads the epoch
   // BEFORE the catalog, so a lookup that races a re-registration either
   // keys the new data under the old epoch (unreachable after the bump —
   // harmless) or misses; it can never key OLD data under the NEW epoch.
-  // createIndex/dropIndex update the catalog first, then bump.
-  private def bumpEpoch(name: String): Unit = {
+  // createIndex/dropIndex update the catalog first, then call this.
+  private def newEpoch(name: String): Unit = {
     epochs.getOrElseUpdate(name, new java.util.concurrent.atomic.AtomicLong)
       .incrementAndGet()
-    ()
+    Seq(replyCache, baseCache, aggReplyCache).foreach(_.dropIndex(name))
   }
-  private val replyCache = scala.collection.concurrent.TrieMap.empty[String, SearchEngine.CachedReply]
-  private val replyTick = new java.util.concurrent.atomic.AtomicLong
-  private[graft] def replyCacheSize: Int = replyCache.size
-  private def dropCachedReplies(name: String): Unit = {
-    replyCache.filterInPlace { case (_, v) => v.indexName != name }
-    ()
-  }
-  private def replyKey(name: String, ep: Long, query: String,
-                       opts: SearchOptions): String = {
-    def pv(v: ParamValue): String = v match {
-      case StringParam(s) => "s:" + s
-      case VectorParam(a) => "v:" + a.mkString(",") // by contents, not identity
-    }
-    // length-prefixed join: user-controlled strings (query text, param
-    // names/values) may contain ANY character, so delimiter joining
-    // would let two different requests collide on one key and serve
-    // each other's cached replies — "<len>:<content>" per component is
-    // unambiguous regardless of content
-    val sb = new StringBuilder
-    def add(s: String): Unit = { sb.append(s.length).append(':').append(s); () }
-    add(name); add(ep.toString); add(query)
-    add(opts.limit.toString); add(opts.sortBy.toString)
-    opts.returnFields.foreach { case (f, as) => add(f); add(as.toString) }
-    add(Seq(opts.noContent, opts.slop, opts.inorder, opts.verbatim,
-      opts.withSortKeys).mkString(","))
-    opts.params.toSeq.sortBy(_._1).foreach { case (k, v) => add(k); add(pv(v)) }
-    add(Seq(maxNonVectorResultsFetched, maxSearchResultRecordSize,
-      maxSearchResultFieldsCount).mkString(","))
-    sb.toString
-  }
-  private def evictLruReplies(): Unit =
-    while (replyCache.size > replyCacheMaxEntries) {
-      val oldest = replyCache.minByOption { case (_, v) => v.lastUsed.get() }
-      oldest.foreach { case (k, _) => replyCache.remove(k) }
-      if (oldest.isEmpty) return
-    }
 
-  // ---------------------------------------------------------------------
-  // Filtered-base cache — the second serving lever (STATUS.md "Round 11
-  // — serving-floor decomposition"): the reply cache only serves EXACT
-  // repeats, but the expensive half of a non-vector reply — filterStage
-  // + limit(cap+1) + the total count — depends on strictly fewer inputs
-  // than the reply
+  /** The engine settings that can change a cached answer, part of every
+    * cache key: the fetch cap and the two record limits (search pages
+    * and totals), the fuzzy nesting cap (a deeper `%` query is a parse
+    * error) and the emulated release (aggregate expression semantics). */
+  private def cacheSettings: String =
+    Seq(maxNonVectorResultsFetched, maxSearchResultRecordSize,
+      maxSearchResultFieldsCount, fuzzyMaxDistance, emulateRelease).mkString(",")
+
+  /** Complete non-vector FT.SEARCH replies, with the per-call metric
+    * effects a hit replays. */
+  val replyCache = new EpochCache[SearchEngine.CachedReply](256, epochOf,
+    () => cacheSettings, _.reply.rows.length <= replyCacheMaxRows)
+  /** Replies with more page rows than this are never cached (memory
+    * bound per entry; LIMIT-sized pages are far below it). */
+  var replyCacheMaxRows: Int = 10000
+
+  // Filtered bases: the reply cache only serves EXACT repeats, but the
+  // expensive half of a non-vector reply — filterStage + limit(cap+1) +
+  // the total count — depends on strictly fewer inputs than the reply
   // (query, params, VERBATIM/SLOP/INORDER, the fetch cap; NOT the page
   // offset/limit, SORTBY, RETURN, NOCONTENT, WITHSORTKEYS). A client
   // paging through results, or re-requesting with different RETURN
-  // fields, re-pays the corpus scan today. This cache keeps the
-  // materialized base (a driver-resident LocalRelation of at most
-  // baseCacheMaxRows rows — r13: Spark persists left the serving path,
-  // see cachePrivate) plus its count for one registration epoch, so
-  // such variants pay a LocalTableScan instead of the corpus scan.
-  // Bases past the row bound are served per-request from a
-  // cache-private persisted materialization and never cached — when
-  // the fetch cap truncates those, the single materialization still
-  // guarantees the total and its page draw from the SAME subset.
-  // Invalidation and race-ordering are identical to the reply cache
-  // (epoch read BEFORE catalog; insert re-checks the epoch). KNN is
-  // excluded for the reply cache's reasons. Narrow NOCONTENT bases
-  // (see the single-action path in searchReply) are LocalRelations of
-  // collected key/sortkey rows and carry their projection in the key so
-  // a content request can never hit a keys-only base; a NOCONTENT
-  // request may fall through to a full base (a superset projection).
-  // ---------------------------------------------------------------------
-  /** Cache the filtered cap+1-row base relation + total per (epoch,
-    * query, filter-affecting options), serving page/RETURN variants
-    * without re-scanning (invalidated per index on createIndex /
-    * dropIndex). */
-  var baseCacheEnabled: Boolean = true
-  /** LRU bound on cached filtered bases across all indexes. Since r13
-    * every entry is a driver-resident LocalRelation (full bases of at
-    * most [[baseCacheMaxRows]] rows; narrow NOCONTENT bases of key/sort
-    * rows) — eviction and invalidation are pure map removals, with NO
-    * Spark unpersist lifecycle: the interleaving soak proved that
-    * unpersisting plan-keyed cached data while a concurrent request
-    * reads a plan-equal relation lets AQE freeze a zero-row stage into
+  // fields, then pays a scan of the materialized base instead of the
+  // corpus scan; an untruncated full base also serves as FT.AGGREGATE's
+  // front half. Narrow NOCONTENT bases (see the single-action path in
+  // searchReply) are LocalRelations of collected key/sortkey rows and
+  // carry their projection in the key so a content request can never
+  // hit a keys-only base; a NOCONTENT request may fall through to a
+  // full base (a superset projection).
+  /** Materialized filtered bases with their exact row counts. Full
+    * bases of at most [[baseCacheMaxRows]] rows and narrow NOCONTENT
+    * bases are driver-resident LocalRelations (`local = true`), whose
+    * removal is a plain map removal. A bigger full base enters as its
+    * cache-private persisted relation (`local = false`); eviction and
+    * invalidation `kill()` it, and the unpersist waits for the last
+    * in-flight reader ([[SearchEngine.CachedBase]]) — unpersisting data
+    * a concurrent request reads lets AQE freeze a zero-row stage into
     * that request's reply (see [[cachePrivate]]). */
-  var baseCacheMaxEntries: Int = 32
-  /** Row bound for caching a FULL base as a LocalRelation. Filtered
-    * bases above it (up to the fetch cap) are never cached — they are
-    * served from a request-private persisted materialization instead. */
+  val baseCache = new EpochCache[SearchEngine.CachedBase](32, epochOf,
+    () => cacheSettings, onDrop = _.kill())
+  /** Row bound for materializing a FULL base as a LocalRelation; bigger
+    * bases (up to the fetch cap) stay persisted. */
   var baseCacheMaxRows: Int = 4096
-  private[graft] val baseCacheHits = new java.util.concurrent.atomic.AtomicLong
-  private[graft] val baseCacheMisses = new java.util.concurrent.atomic.AtomicLong
   /** Telemetry: the column list the last single-action NOCONTENT miss
     * collected — at scale this projection is the difference between
     * shipping keys and shipping document text to the driver; specs pin
     * it to exactly key + SORTBY source. */
   private[graft] var lastBaseProjection: Seq[String] = Nil
-  private val baseCache = scala.collection.concurrent.TrieMap.empty[String, SearchEngine.CachedBase]
-  private[graft] def baseCacheSize: Int = baseCache.size
-  private def dropCachedBases(name: String): Unit = {
-    baseCache.filterInPlace { case (_, v) =>
-      val drop = v.indexName == name
-      if (drop) v.kill() // deferred past any in-flight reader
-      !drop
+
+  /** FT.AGGREGATE wire replies keyed by argv, rendered and filled by
+    * [[graft.resp.RespCommands]]: params, stages and TIMEOUT all ride
+    * argv, and the aggregate's KNN front end is exact (aggregateStages
+    * never consults ANN state). Errors are never cached (they throw
+    * past the insert). */
+  val aggReplyCache = new EpochCache[Array[Byte]](64, epochOf,
+    () => cacheSettings, _.length <= aggReplyCacheMaxBytes)
+  /** Wire replies longer than this are never cached. */
+  var aggReplyCacheMaxBytes: Int = 1 << 20
+
+  private def paramParts(opts: SearchOptions): Seq[String] =
+    opts.params.toSeq.sortBy(_._1).flatMap { case (k, v) =>
+      Seq(k, v match {
+        case StringParam(s) => "s:" + s
+        case VectorParam(a) => "v:" + a.mkString(",") // by contents, not identity
+      })
     }
-    ()
-  }
+  private def replyKey(name: String, ep: Long, query: String,
+                       opts: SearchOptions): EpochCache.Key =
+    replyCache.key(name, ep, Seq(query, opts.limit.toString,
+      opts.sortBy.toString) ++
+      opts.returnFields.flatMap { case (f, as) => Seq(f, as.toString) } ++
+      Seq(Seq(opts.noContent, opts.slop, opts.inorder, opts.verbatim,
+        opts.withSortKeys).mkString(",")) ++ paramParts(opts): _*)
   /** Key of the base-affecting request subset. `projection` is "full"
-    * for the whole enriched row set or "nc:<sortalias>" for a narrow
+    * for the whole enriched row set or "nc:<cols>" for a narrow
     * NOCONTENT base, so projections can never cross-serve downward. */
   private def baseKey(name: String, ep: Long, query: String,
-                      opts: SearchOptions, cap: Int, projection: String): String = {
-    def pv(v: ParamValue): String = v match {
-      case StringParam(s) => "s:" + s
-      case VectorParam(a) => "v:" + a.mkString(",")
-    }
-    val sb = new StringBuilder
-    def add(s: String): Unit = { sb.append(s.length).append(':').append(s); () }
-    add(name); add(ep.toString); add(query); add(projection)
-    add(Seq(opts.slop, opts.inorder, opts.verbatim, cap).mkString(","))
-    opts.params.toSeq.sortBy(_._1).foreach { case (k, v) => add(k); add(pv(v)) }
-    sb.toString
-  }
-  private def evictLruBases(): Unit =
-    while (baseCache.size > baseCacheMaxEntries) {
-      val oldest = baseCache.minByOption { case (_, v) => v.lastUsed.get() }
-      oldest.foreach { case (k, _) => baseCache.remove(k).foreach(_.kill()) }
-      if (oldest.isEmpty) return
-    }
-  /** Insert a freshly collected base; drops any entry stranded by a
-    * racing re-registration (same contract as the reply cache's
-    * post-insert epoch re-check). The loser of an insert race is
-    * killed (its plan is nonce-private, so that touches nobody else);
-    * every removal path defers unpersist past in-flight readers. */
-  private def putCachedBase(key: String, entry: SearchEngine.CachedBase): Unit = {
-    baseCache.putIfAbsent(key, entry) match {
-      case Some(_) => entry.kill()
-      case None =>
-        if (epochOf(entry.indexName) != entry.epoch)
-          baseCache.remove(key).foreach(_.kill())
-        evictLruBases()
-    }
-    ()
-  }
+                      opts: SearchOptions, projection: String): EpochCache.Key =
+    baseCache.key(name, ep, Seq(query, projection,
+      Seq(opts.slop, opts.inorder, opts.verbatim).mkString(",")) ++
+      paramParts(opts): _*)
 
   /**
    * Attach an inverted posting relation ([[graft.text.PostingIndex]])
@@ -821,11 +757,9 @@ class SearchEngine {
     derivedEpochs.filterInPlace { case ((_, idx, _), _) => idx != schema.name }
     keyLayouts.remove(schema.name)
     catalog.synchronized { catalog(schema.name) = (schema, stored) }
-    // catalog swap, THEN the epoch bump (see bumpEpoch's ordering
-    // contract with the reply-cache lookup path), THEN the cache drops
-    bumpEpoch(schema.name)
-    dropCachedReplies(schema.name)
-    dropCachedBases(schema.name)
+    // catalog swap, THEN the epoch bump and cache drops (see newEpoch's
+    // ordering contract with the cache lookup paths)
+    newEpoch(schema.name)
     this
   }
 
@@ -837,9 +771,7 @@ class SearchEngine {
   def dropIndex(name: String): Unit = {
     if (catalog.synchronized { catalog.remove(name) }.isEmpty)
       throw new IllegalArgumentException(s"no such index: $name")
-    bumpEpoch(name)
-    dropCachedReplies(name)
-    dropCachedBases(name)
+    newEpoch(name)
     docCounts.remove(name)
     infoStatsCache.remove(name)
     infoDocs.remove(name)
@@ -901,7 +833,7 @@ class SearchEngine {
    */
   def search(indexName: String, query: String,
              opts: SearchOptions = SearchOptions()): DataFrame = {
-    // epoch BEFORE the catalog read (bumpEpoch ordering contract)
+    // epoch BEFORE the catalog read (newEpoch ordering contract)
     val ep = epochOf(indexName)
     val (schema, docs) = index(indexName)
     val parsed = FilterParser.parse(query, opts.params,
@@ -1544,25 +1476,19 @@ class SearchEngine {
     // not subject to the search fetch cap.
     var df = {
       val cached =
-        if (baseCacheEnabled && parsed.knn.isEmpty) {
+        if (parsed.knn.isEmpty) {
           val cap = maxNonVectorResultsFetched
           // LOCAL bases only: the returned DataFrame escapes the engine
           // (the caller collects whenever it likes), so a refcounted
           // persisted base cannot be handed out here — a LocalRelation
-          // is immutable and safe forever
-          baseCache.get(baseKey(indexName, ep, query, opts, cap, "full"))
-            .filter(cb => cb.local && cb.n <= cap)
+          // is immutable and safe forever. Hits and misses count here
+          // too: one lookup population across search AND aggregate.
+          baseCache.get(Seq(baseKey(indexName, ep, query, opts, "full")),
+            cb => cb.local && cb.n <= cap)
         } else None
       cached match {
-        case Some(cb) =>
-          cb.lastUsed.set(replyTick.incrementAndGet())
-          baseCacheHits.incrementAndGet()
-          cb.df
+        case Some(cb) => cb.df
         case None =>
-          // count the miss too, so hits/misses describe one coherent
-          // lookup population across search AND aggregate traffic
-          if (baseCacheEnabled && parsed.knn.isEmpty)
-            baseCacheMisses.incrementAndGet()
           // NOT widened (Parallelism.ensure) on purpose: double
           // reducers (AVG/SUM/STDDEV) are summation-order-sensitive,
           // and re-partitioning the pipeline input changes which rows
@@ -1611,19 +1537,16 @@ class SearchEngine {
   def searchReply(indexName: String, query: String,
                   opts: SearchOptions = SearchOptions()): SearchEngine.SearchReply =
     Metrics.timed {
-      // epoch BEFORE the catalog read (bumpEpoch ordering contract)
+      // epoch BEFORE the catalog read (newEpoch ordering contract)
       val ep = epochOf(indexName)
       val (schema, docs) = index(indexName)
       val parsed = FilterParser.parse(query, opts.params,
       fuzzyMaxDistance = fuzzyMaxDistance, analyzer = schema.analyzer)
       recordQueryClass(parsed)
-      val cacheable = replyCacheEnabled && parsed.knn.isEmpty
-      val key = if (cacheable) replyKey(indexName, ep, query, opts) else ""
-      val hit = if (cacheable) replyCache.get(key) else None
-      hit match {
+      // KNN bypasses the cache: never consulted, so neither hit nor miss
+      val key = if (parsed.knn.isEmpty) Some(replyKey(indexName, ep, query, opts)) else None
+      key.flatMap(k => replyCache.get(Seq(k))) match {
         case Some(e) =>
-          e.lastUsed.set(replyTick.incrementAndGet())
-          replyCacheHits.incrementAndGet()
           // replay the per-call metric effects so counters stay
           // call-accurate (EngineAdminSpec / ResponseGeneratorParitySpec
           // semantics: every capped/dropping call counts)
@@ -1631,7 +1554,6 @@ class SearchEngine {
           if (e.dropped > 0) Metrics.queryResultRecordDropped.addAndGet(e.dropped)
           e.reply
         case None =>
-          replyCacheMisses.incrementAndGet()
           val (reply, limited, dropped) =
             if (parsed.knn.isEmpty)
               Metrics.nonVectorLatency.timed(
@@ -1648,16 +1570,7 @@ class SearchEngine {
                 .observeNanos(System.nanoTime() - t0)
               r
             }
-          if (cacheable && reply.rows.length <= replyCacheMaxRows) {
-            replyCache.put(key, SearchEngine.CachedReply(indexName, ep, reply, limited,
-              dropped, new java.util.concurrent.atomic.AtomicLong(
-                replyTick.incrementAndGet())))
-            // a re-registration that raced this compute bumped the
-            // epoch: the entry is unreachable (keys carry the epoch),
-            // remove it so it can't linger holding rows
-            if (epochOf(indexName) != ep) replyCache.remove(key)
-            evictLruReplies()
-          }
+          key.foreach(replyCache.put(_, SearchEngine.CachedReply(reply, limited, dropped)))
           reply
       }
     }
@@ -1708,28 +1621,20 @@ class SearchEngine {
       if (!opts.noContent) None
       else Some((schema.keyColumn +: opts.sortBy.map { case (f, _) =>
         schema.fieldOrFail(f).alias }.toSeq).distinct)
-    val fullKey = baseKey(indexName, ep, query, opts, cap, "full")
+    val fullKey = baseKey(indexName, ep, query, opts, "full")
     // a NOCONTENT request may serve from a full base (superset
     // projection) but prefers its own narrow one; a content request
     // must never see a keys-only base — the projection is in the key
     val lookupKeys = narrowProjection match {
       case Some(cols) =>
-        Seq(baseKey(indexName, ep, query, opts, cap, "nc:" + cols.mkString(",")), fullKey)
+        Seq(baseKey(indexName, ep, query, opts, "nc:" + cols.mkString(",")), fullKey)
       case None => Seq(fullKey)
     }
-    val hit =
-      if (baseCacheEnabled)
-        lookupKeys.view.flatMap(baseCache.get).find(_.acquire())
-      else None
-    hit match {
+    baseCache.get(lookupKeys, _.acquire()) match {
       case Some(cb) =>
-        try {
-          cb.lastUsed.set(replyTick.incrementAndGet())
-          baseCacheHits.incrementAndGet()
-          finishFrom(cb.df, cb.n)
-        } finally cb.release()
+        try finishFrom(cb.df, cb.n)
+        finally cb.release()
       case None =>
-        if (baseCacheEnabled) baseCacheMisses.incrementAndGet()
         narrowProjection match {
           case Some(cols) =>
             lastBaseProjection = cols
@@ -1741,10 +1646,8 @@ class SearchEngine {
             // the one code path at LocalTableScan cost
             val local = docs.sparkSession.createDataFrame(
               java.util.Arrays.asList(collected: _*), narrow.schema)
-            if (baseCacheEnabled)
-              putCachedBase(lookupKeys.head, SearchEngine.CachedBase(indexName, ep,
-                local, collected.length.toLong,
-                new java.util.concurrent.atomic.AtomicLong(replyTick.incrementAndGet())))
+            baseCache.put(lookupKeys.head,
+              SearchEngine.CachedBase(local, collected.length.toLong))
             finishFrom(local, collected.length.toLong)
           case None =>
             // ONE cache-PRIVATE persisted materialization serves total
@@ -1790,19 +1693,12 @@ class SearchEngine {
                 val local = docs.sparkSession.createDataFrame(
                   java.util.Arrays.asList(head: _*), solo.schema)
                 solo.unpersist(blocking = false)
-                if (baseCacheEnabled)
-                  putCachedBase(fullKey, SearchEngine.CachedBase(indexName, ep,
-                    local, n,
-                    new java.util.concurrent.atomic.AtomicLong(replyTick.incrementAndGet())))
+                baseCache.put(fullKey, SearchEngine.CachedBase(local, n))
                 finishFrom(local, n)
               } else {
                 val out = finishFrom(solo, n)
-                if (baseCacheEnabled)
-                  putCachedBase(fullKey, SearchEngine.CachedBase(indexName, ep,
-                    solo, n,
-                    new java.util.concurrent.atomic.AtomicLong(replyTick.incrementAndGet()),
-                    local = false))
-                else solo.unpersist(blocking = false)
+                // a base the cache does not keep is killed: unpersisted
+                baseCache.put(fullKey, SearchEngine.CachedBase(solo, n, local = false))
                 out
               }
             } catch { case e: Throwable =>

@@ -128,60 +128,17 @@ object Resp {
 final class RespCommands(engine: SearchEngine, cmds: Commands) {
   import Resp._
 
-  // FT.AGGREGATE wire-reply cache, the aggregate counterpart of the
-  // engine's searchReply cache: an aggregate reply is a pure function
-  // of (index registration epoch, argv) — the aggregate's KNN
-  // front-end is EXACT (aggregateStages never consults ANN state),
-  // params/stages/TIMEOUT all ride argv, and every results-affecting
-  // mutation bumps the epoch (createIndex/dropIndex). Errors are never
-  // cached (they throw past the insert). Bounded by entries and by
-  // reply bytes.
-  var aggCacheMaxEntries: Int = 64
-  var aggCacheMaxBytes: Int = 1 << 20
-  private[graft] val aggCacheHits = new java.util.concurrent.atomic.AtomicLong
-  private val aggCache = scala.collection.concurrent.TrieMap
-    .empty[String, (Array[Byte], java.util.concurrent.atomic.AtomicLong)]
-  private val aggTick = new java.util.concurrent.atomic.AtomicLong
-  private[graft] def aggCacheSize: Int = aggCache.size
-
+  // FT.AGGREGATE replies are cached as wire bytes in the engine's
+  // aggReplyCache; the key captures the epoch BEFORE execute (the
+  // engine's newEpoch ordering contract). Errors throw past the insert.
   private def ftAggregate(argv: Seq[String]): Array[Byte] = {
-    // epoch BEFORE execute (the engine's bumpEpoch ordering contract)
-    val ep = if (argv.length >= 2) Some(engine.registrationEpoch(argv(1))) else None
-    // length-prefixed join — argv elements are arbitrary client bytes,
-    // so delimiter joining would let two different argv vectors collide
-    // on one cache key
-    val key = ep.map { e =>
-      val sb = new StringBuilder
-      sb.append(e).append('|')
-      argv.foreach(a => sb.append(a.length).append(':').append(a))
-      sb.toString
-    }
-    key.flatMap(aggCache.get) match {
-      case Some((bytes, used)) =>
-        used.set(aggTick.incrementAndGet())
-        aggCacheHits.incrementAndGet()
-        bytes
-      case None =>
-        val bytes = aggregateReply(
-          cmds.execute(argv).asInstanceOf[org.apache.spark.sql.DataFrame])
-        key.foreach { k =>
-          if (bytes.length <= aggCacheMaxBytes) {
-            aggCache.put(k, (bytes,
-              new java.util.concurrent.atomic.AtomicLong(aggTick.incrementAndGet())))
-            // a re-registration racing this compute keyed old data
-            // under an old epoch — unreachable; drop it eagerly
-            if (engine.registrationEpoch(argv(1)) != ep.get) aggCache.remove(k)
-            var evicting = aggCache.size > aggCacheMaxEntries
-            while (evicting) {
-              aggCache.minByOption { case (_, (_, u)) => u.get() } match {
-                case Some((old, _)) => aggCache.remove(old)
-                case None => evicting = false
-              }
-              evicting = evicting && aggCache.size > aggCacheMaxEntries
-            }
-          }
-        }
-        bytes
+    val cache = engine.aggReplyCache
+    val key = argv.lift(1).map(idx => cache.key(idx, engine.registrationEpoch(idx), argv: _*))
+    key.flatMap(k => cache.get(Seq(k))).getOrElse {
+      val bytes = aggregateReply(
+        cmds.execute(argv).asInstanceOf[org.apache.spark.sql.DataFrame])
+      key.foreach(cache.put(_, bytes))
+      bytes
     }
   }
 

@@ -155,7 +155,7 @@ object InterleaveSoak {
           readers: Int, noDerived: Boolean = false): Either[String, (Long, Int)] = {
     val e = new SearchEngine
     e.postingRouteMaxSelectivity = 1.0 // force every routable conjunct
-    if (noDerived) { e.replyCacheEnabled = false; e.baseCacheEnabled = false }
+    if (noDerived) { e.replyCache.maxEntries = 0; e.baseCache.maxEntries = 0 }
     SearchEngine.debugEmptyPage = true // r13 anomaly forensics
     registerVersion(spark, e, 1, noDerived)
     val lastStarted = new AtomicInteger(1)

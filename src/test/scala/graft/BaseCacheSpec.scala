@@ -51,12 +51,12 @@ class BaseCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
     val q = "@price:[3 18]"
     val r1 = e.searchReply("bc_t", q,
       SearchOptions(limit = (0, 5), sortBy = Some(("price", true))))
-    val bh = e.baseCacheHits.get()
-    val rm = e.replyCacheMisses.get()
+    val bh = e.baseCache.hits.get()
+    val rm = e.replyCache.misses.get()
     val r2 = e.searchReply("bc_t", q,
       SearchOptions(limit = (5, 5), sortBy = Some(("price", true))))
-    assert(e.replyCacheMisses.get() == rm + 1, "new page = reply miss")
-    assert(e.baseCacheHits.get() == bh + 1, "same filter = base hit")
+    assert(e.replyCache.misses.get() == rm + 1, "new page = reply miss")
+    assert(e.baseCache.hits.get() == bh + 1, "same filter = base hit")
     assert(r1.total == 16 && r2.total == 16)
     assert(r1.rows.map(_.getString(0)).toSeq == (3 to 7).map(i => s"k$i"))
     assert(r2.rows.map(_.getString(0)).toSeq == (8 to 12).map(i => s"k$i"))
@@ -66,10 +66,10 @@ class BaseCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
     val e = freshEngine(n = 10)
     val q = "@price:[2 6]"
     e.searchReply("bc_t", q, SearchOptions(limit = (0, 10)))
-    val bh = e.baseCacheHits.get()
+    val bh = e.baseCache.hits.get()
     val r = e.searchReply("bc_t", q, SearchOptions(limit = (0, 10),
       returnFields = Seq(("price", Some("p")))))
-    assert(e.baseCacheHits.get() == bh + 1)
+    assert(e.baseCache.hits.get() == bh + 1)
     assert(r.rows.map(r0 => (r0.getString(0), r0.getDouble(1))).toSeq ==
       (2 to 6).map(i => (s"k$i", i.toDouble)))
   }
@@ -82,9 +82,9 @@ class BaseCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
     val r1 = e.searchReply("bc_t", q, opts1)
     assert(r1.total == 15)
     assert(r1.rows.map(_.getString(0)).toSeq == Seq("k15", "k14", "k13", "k12"))
-    val bh = e.baseCacheHits.get()
+    val bh = e.baseCache.hits.get()
     val r2 = e.searchReply("bc_t", q, opts1.copy(limit = (4, 4)))
-    assert(e.baseCacheHits.get() == bh + 1, "next NOCONTENT page hits the narrow base")
+    assert(e.baseCache.hits.get() == bh + 1, "next NOCONTENT page hits the narrow base")
     assert(r2.rows.map(_.getString(0)).toSeq == Seq("k11", "k10", "k9", "k8"))
   }
 
@@ -93,17 +93,17 @@ class BaseCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
     val q = "@price:[2 9]"
     // narrow base first (keys only — no sort field needed)
     e.searchReply("bc_t", q, SearchOptions(noContent = true))
-    val bh0 = e.baseCacheHits.get()
-    val bm0 = e.baseCacheMisses.get()
+    val bh0 = e.baseCache.hits.get()
+    val bm0 = e.baseCache.misses.get()
     val rc = e.searchReply("bc_t", q,
       SearchOptions(returnFields = Seq(("body", None)), limit = (0, 3)))
-    assert(e.baseCacheHits.get() == bh0, "content must MISS the narrow base")
-    assert(e.baseCacheMisses.get() == bm0 + 1)
+    assert(e.baseCache.hits.get() == bh0, "content must MISS the narrow base")
+    assert(e.baseCache.misses.get() == bm0 + 1)
     assert(rc.rows.forall(r0 => r0.getString(1) != null), "content present")
     // the content miss built a FULL base; NOCONTENT can serve from it
-    val bh1 = e.baseCacheHits.get()
+    val bh1 = e.baseCache.hits.get()
     val rn = e.searchReply("bc_t", q, SearchOptions(noContent = true, limit = (3, 3)))
-    assert(e.baseCacheHits.get() == bh1 + 1, "NOCONTENT hits the full base")
+    assert(e.baseCache.hits.get() == bh1 + 1, "NOCONTENT hits the full base")
     assert(rn.rows.map(_.getString(0)).toSeq == Seq("k5", "k6", "k7"))
   }
 
@@ -116,7 +116,7 @@ class BaseCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
     val docs = (1 to 15).map(i => (s"k$i", s"doc body number$i", i.toDouble))
       .toDF("__key", "body", "price")
     e.createIndex(schema, Documents.enrich(docs, schema))
-    assert(e.baseCacheSize == 0, "re-registration drops the index's bases")
+    assert(e.baseCache.size == 0, "re-registration drops the index's bases")
     // a DIFFERENT page (reply miss) must not resurrect the stale base
     assert(e.searchReply("bc_t", q, SearchOptions(limit = (3, 3))).total == 15)
   }
@@ -163,10 +163,10 @@ class BaseCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
     val e = freshEngine(n = 20)
     val q = "@price:[5 14]"
     e.searchReply("bc_t", q, SearchOptions(limit = (0, 3))) // seeds full base, n=10
-    val bh = e.baseCacheHits.get()
+    val bh = e.baseCache.hits.get()
     val agg = e.aggregate("bc_t", q,
       Seq("GROUPBY", "0", "REDUCE", "COUNT", "0", "AS", "cnt")).collect()
-    assert(e.baseCacheHits.get() == bh + 1, "aggregate must hit the full base")
+    assert(e.baseCache.hits.get() == bh + 1, "aggregate must hit the full base")
     assert(agg.head.getDouble(agg.head.fieldIndex("cnt")) == 10.0)
   }
 
@@ -176,31 +176,31 @@ class BaseCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
     val q = "@price:[0 +inf]"
     val r = e.searchReply("bc_t", q, SearchOptions(limit = (0, 3)))
     assert(r.total == 5, "search reply is capped")
-    val bh = e.baseCacheHits.get()
+    val bh = e.baseCache.hits.get()
     val agg = e.aggregate("bc_t", q,
       Seq("GROUPBY", "0", "REDUCE", "COUNT", "0", "AS", "cnt")).collect()
-    assert(e.baseCacheHits.get() == bh, "capped base must not serve the aggregate")
+    assert(e.baseCache.hits.get() == bh, "capped base must not serve the aggregate")
     assert(agg.head.getDouble(agg.head.fieldIndex("cnt")) == 20.0,
       "aggregate counts the FULL filtered set")
   }
 
   test("LRU bound holds with unpersist-on-evict; disable flag bypasses") {
     val e = freshEngine(n = 20)
-    e.baseCacheMaxEntries = 2
+    e.baseCache.maxEntries = 2
     e.searchReply("bc_t", "@price:[1 1]", SearchOptions(limit = (0, 1)))
     e.searchReply("bc_t", "@price:[2 2]", SearchOptions(limit = (0, 1)))
     e.searchReply("bc_t", "@price:[3 3]", SearchOptions(limit = (0, 1)))
-    assert(e.baseCacheSize <= 2)
-    val bh = e.baseCacheHits.get()
+    assert(e.baseCache.size <= 2)
+    val bh = e.baseCache.hits.get()
     e.searchReply("bc_t", "@price:[3 3]", SearchOptions(limit = (0, 2)))
-    assert(e.baseCacheHits.get() == bh + 1, "most recent base survives")
+    assert(e.baseCache.hits.get() == bh + 1, "most recent base survives")
     // an evicted base recomputes correctly (unpersist left lineage valid)
     assert(e.searchReply("bc_t", "@price:[1 1]", SearchOptions(limit = (0, 2))).total == 1)
 
-    e.baseCacheEnabled = false
-    val bh1 = e.baseCacheHits.get()
-    val bm1 = e.baseCacheMisses.get()
+    e.baseCache.maxEntries = 0
+    val bh1 = e.baseCache.hits.get()
+    val bm1 = e.baseCache.misses.get()
     assert(e.searchReply("bc_t", "@price:[4 4]", SearchOptions(limit = (0, 2))).total == 1)
-    assert(e.baseCacheHits.get() == bh1 && e.baseCacheMisses.get() == bm1)
+    assert(e.baseCache.hits.get() == bh1 && e.baseCache.misses.get() == bm1)
   }
 }

@@ -47,15 +47,15 @@ class ReplyCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
     val e = freshEngine()
     val opts = SearchOptions(limit = (0, 5))
     val r1 = e.searchReply("rc_t", "@price:[3 9]", opts)
-    val h0 = e.replyCacheHits.get()
+    val h0 = e.replyCache.hits.get()
     val r2 = e.searchReply("rc_t", "@price:[3 9]", opts)
-    assert(e.replyCacheHits.get() == h0 + 1)
+    assert(e.replyCache.hits.get() == h0 + 1)
     assert(r2.total == r1.total)
     assert(r2.rows.toSeq == r1.rows.toSeq)
     // different paging is a different key — a miss, not a wrong hit
-    val m0 = e.replyCacheMisses.get()
+    val m0 = e.replyCache.misses.get()
     val r3 = e.searchReply("rc_t", "@price:[3 9]", SearchOptions(limit = (2, 5)))
-    assert(e.replyCacheMisses.get() == m0 + 1)
+    assert(e.replyCache.misses.get() == m0 + 1)
     assert(r3.rows.length == 5 && r3.total == r1.total)
   }
 
@@ -132,35 +132,38 @@ class ReplyCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
     e.createIndex(schema, Documents.enrich(docs, schema))
     val opts = SearchOptions(params = Map(
       "BLOB" -> graft.query.VectorParam(Array(0f, 0f))))
-    val h0 = e.replyCacheHits.get()
+    val h0 = e.replyCache.hits.get()
+    val m0 = e.replyCache.misses.get()
     val r1 = e.searchReply("rc_v", "*=>[KNN 3 @vec $BLOB]", opts)
     val r2 = e.searchReply("rc_v", "*=>[KNN 3 @vec $BLOB]", opts)
     assert(r1.total == 3 && r2.total == 3)
-    assert(e.replyCacheHits.get() == h0, "KNN must bypass the cache")
-    assert(e.replyCacheSize == 0)
+    assert(e.replyCache.hits.get() == h0, "KNN must bypass the cache")
+    assert(e.replyCache.misses.get() == m0,
+      "a lookup the cache never consulted is not a miss")
+    assert(e.replyCache.size == 0)
   }
 
   test("LRU bound holds; oversized pages are not cached; disable flag works") {
     val e = freshEngine(n = 20)
-    e.replyCacheMaxEntries = 2
+    e.replyCache.maxEntries = 2
     e.searchReply("rc_t", "@price:[1 1]")
     e.searchReply("rc_t", "@price:[2 2]")
     e.searchReply("rc_t", "@price:[3 3]")
-    assert(e.replyCacheSize <= 2)
+    assert(e.replyCache.size <= 2)
     // the most recent entries survive: [3 3] must hit
-    val h0 = e.replyCacheHits.get()
+    val h0 = e.replyCache.hits.get()
     e.searchReply("rc_t", "@price:[3 3]")
-    assert(e.replyCacheHits.get() == h0 + 1)
+    assert(e.replyCache.hits.get() == h0 + 1)
 
     e.replyCacheMaxRows = 3
     e.searchReply("rc_t", "@price:[0 +inf]", SearchOptions(limit = (0, 10)))
-    val m0 = e.replyCacheMisses.get()
+    val m0 = e.replyCache.misses.get()
     e.searchReply("rc_t", "@price:[0 +inf]", SearchOptions(limit = (0, 10)))
-    assert(e.replyCacheMisses.get() == m0 + 1, "a 10-row page above maxRows=3 must not cache")
+    assert(e.replyCache.misses.get() == m0 + 1, "a 10-row page above maxRows=3 must not cache")
 
-    e.replyCacheEnabled = false
-    val h1 = e.replyCacheHits.get()
+    e.replyCache.maxEntries = 0
+    val h1 = e.replyCache.hits.get()
     e.searchReply("rc_t", "@price:[3 3]")
-    assert(e.replyCacheHits.get() == h1)
+    assert(e.replyCache.hits.get() == h1)
   }
 }

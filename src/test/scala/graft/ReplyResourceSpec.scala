@@ -74,7 +74,7 @@ class ReplyResourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("failing SORTBY leaks nothing with the base cache disabled either") {
     val e = freshEngine()
-    e.baseCacheEnabled = false
+    e.baseCache.maxEntries = 0
     val bad = SearchOptions(sortBy = Some(("no_such_field", false)))
     val baseline = spark.sparkContext.getPersistentRDDs.size
     (1 to 3).foreach { _ =>
@@ -104,10 +104,10 @@ class ReplyResourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ok = e.searchReply("rr_t", "@price:[3 25]",
       SearchOptions(sortBy = Some(("price", true))))
     assert(ok.total == 23)
-    val h0 = e.baseCacheHits.get()
+    val h0 = e.baseCache.hits.get()
     e.searchReply("rr_t", "@price:[3 25]",
       SearchOptions(limit = (5, 5), sortBy = Some(("price", false))))
-    assert(e.baseCacheHits.get() == h0 + 1)
+    assert(e.baseCache.hits.get() == h0 + 1)
     // ...and invalidation (the maintainer refresh) returns storage to
     // baseline once no reader holds the entry
     e.createIndex(graft.model.IndexSchema("rr_t", Seq(
@@ -121,7 +121,7 @@ class ReplyResourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("big-base path with the cache disabled unpersists after success") {
     val e = freshEngine()
     e.baseCacheMaxRows = 5
-    e.baseCacheEnabled = false
+    e.baseCache.maxEntries = 0
     val baseline = spark.sparkContext.getPersistentRDDs.size
     val ok = e.searchReply("rr_t", "@price:[3 25]",
       SearchOptions(sortBy = Some(("price", true))))
@@ -141,7 +141,7 @@ class ReplyResourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("hits + misses = lookups across search AND aggregate traffic") {
     val e = freshEngine()
-    val h0 = e.baseCacheHits.get(); val m0 = e.baseCacheMisses.get()
+    val h0 = e.baseCache.hits.get(); val m0 = e.baseCache.misses.get()
     // 1: search, fresh filter → base miss (fills the full base)
     e.searchReply("rr_t", "@price:[3 25]", SearchOptions())
     // 2: aggregate over the SAME filter → base hit
@@ -150,8 +150,8 @@ class ReplyResourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // 3: aggregate over a NEW filter → base miss (must be counted)
     e.aggregate("rr_t", "@price:[5 9]",
       Seq("GROUPBY", "0", "REDUCE", "COUNT", "0", "AS", "cnt")).collect()
-    val hits = e.baseCacheHits.get() - h0
-    val misses = e.baseCacheMisses.get() - m0
+    val hits = e.baseCache.hits.get() - h0
+    val misses = e.baseCache.misses.get() - m0
     assert(hits == 1, s"aggregate over a cached filter is the one hit (got $hits)")
     assert(misses == 2, s"search miss + aggregate miss (got $misses)")
     assert(hits + misses == 3, "three lookups, every one accounted")
