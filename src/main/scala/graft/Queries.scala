@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.engine.{Commands, SearchEngine, SearchOptions}
 import graft.model.{DistanceMetric, FieldDef, IndexSchema, NumericField, VectorField}
 import graft.query.{ParamValue, VectorParam}
+import graft.text.PostingKind
 
 /**
  * The driver-facing query registry: every entry is one operator from
@@ -631,9 +632,9 @@ object Queries {
         graft.text.PostingIndex.buildPositions(enrichedBase, schema, "text"),
         s"$storeDir/__pos")
       val maintainer = new graft.streaming.IndexMaintainer(e, "documents_inc",
-        schema, postingStores = Map("text" -> store),
-        suffixStores = Map("text" -> sfxStore),
-        positionalStores = Map("text" -> posStore)).register()
+        schema, stores = Map(("text", PostingKind.Term) -> store,
+          ("text", PostingKind.Suffix) -> sfxStore,
+          ("text", PostingKind.Positional) -> posStore)).register()
       maintainer.onBatch(raw.filter(col("doc_id") % 3 === 0)
         .withColumn("op", lit("upsert"))
         .withColumn("__key", col("doc_id").cast("string"))

@@ -34,6 +34,14 @@ object Metrics {
     * (reference query_result_record_dropped_cnt,
     * query/response_generator.cc:408-434). */
   val queryResultRecordDropped = new AtomicLong
+  /** Posting-route decisions, one per top-level conjunct of a
+    * non-match-all filter: routed through a posting semi-join; a route
+    * existed but the cardinality guard rejected it (estimate missing or
+    * above `postingRouteMaxSelectivity × N`); no posting route at all
+    * (columnar scan). */
+  val postingRouted = new AtomicLong
+  val postingGuardRejected = new AtomicLong
+  val postingScan = new AtomicLong
 
   /** log₂ latency histogram: bucket i counts samples in
     * [2^i, 2^(i+1)) microseconds; last bucket is the overflow — the
@@ -124,7 +132,10 @@ object Metrics {
       "query_prefiltering_requests_cnt" -> knnPrefilter.get(),
       "query_inline_filtering_requests_cnt" -> knnInline.get(),
       "query_nonvector_results_fetched_limited_cnt" -> nonVectorFetchLimited.get(),
-      "query_result_record_dropped_cnt" -> queryResultRecordDropped.get())
+      "query_result_record_dropped_cnt" -> queryResultRecordDropped.get(),
+      "query_posting_routed_cnt" -> postingRouted.get(),
+      "query_posting_guard_rejected_cnt" -> postingGuardRejected.get(),
+      "query_posting_scan_cnt" -> postingScan.get())
     counters ++
       compatLegacy.toSeq.sortBy(_._1).map { case (l, c) =>
         s"compatibility-$l" -> c.get() } ++
@@ -136,7 +147,7 @@ object Metrics {
   def reset(): Unit = {
     Seq(querySuccess, queryFailed, queryVector, queryNonVector, queryText,
       queryHybrid, knnPrefilter, knnInline, nonVectorFetchLimited,
-      queryResultRecordDropped)
+      queryResultRecordDropped, postingRouted, postingGuardRejected, postingScan)
       .foreach(_.set(0))
     compatLegacy.clear()
     Seq(latency, hnswSearchLatency, flatSearchLatency, nonVectorLatency,

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.FloatType
 import graft.model._
 import graft.query._
 import graft.compile.PredicateCompiler
-import graft.text.Analyzer
+import graft.text.{Analyzer, PostingKind}
 import graft.functions.vector_distance
 
 /**
@@ -79,11 +79,6 @@ object SearchEngine {
   /** Full FT.SEARCH reply: pre-LIMIT total + page (S7/R6). */
   final case class SearchReply(total: Long, rows: Array[org.apache.spark.sql.Row])
 
-  /** Soak/probe-only forensics switch (see nonVectorReply): when on, a
-    * page that collects empty while its total counted throws a
-    * diagnostic instead of replying — the r13 anomaly localizer. */
-  @volatile var debugEmptyPage: Boolean = false
-
   /** A complete cached reply plus the per-call metric effects to replay
     * on a hit, so counters stay call-accurate (truncation + record
     * drops). */
@@ -130,6 +125,12 @@ object SearchEngine {
     }
   }
 
+  /** One derived-state registry entry (see [[SearchEngine]]'s
+    * `derived`): the posting relation, its stats, and the registration
+    * epoch of the relation. */
+  private[engine] final case class Derived(rel: Option[DataFrame],
+      stats: Option[PostingStats], epoch: Long)
+
   /** Index build state (reference index_schema.h:102-109, FT.INFO
     * fields index_schema.cc:1244-1263): `state` is "ready" or
     * "backfill_in_progress"; percent counts the initial fill only —
@@ -169,27 +170,28 @@ class SearchEngine {
   // monitor (all other engine caches are lock-free TrieMaps — queries
   // read them concurrently with maintainer-thread registration)
   private val catalog = scala.collection.mutable.LinkedHashMap.empty[String, (IndexSchema, DataFrame)]
-  private val annIndexes = scala.collection.concurrent.TrieMap.empty[(String, String), graft.pipeline.Nsw.NswIndex]
-  private val postings = scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-  private val postingStats = scala.collection.concurrent.TrieMap.empty[(String, String), PostingStats]
-  private val suffixPostings = scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-  private val tokenStats = scala.collection.concurrent.TrieMap.empty[(String, String), PostingStats]
-  private val posPostings = scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-  private val posStats = scala.collection.concurrent.TrieMap.empty[(String, String), PostingStats]
-  /** Registration epoch of each derived RELATION — (kind, index, field)
-    * → [[epochOf]] at registration time; kinds: posting / suffix /
-    * pos / ann. The filter and KNN stages consult a derived relation
-    * only when its registration epoch equals the epoch the request
-    * captured BEFORE its catalog read: a reader that snapshotted the
-    * OLD docs just before a createIndex swap must not route through
-    * postings the maintainer re-registered from the NEW corpus — that
-    * semi-join would drop keys the old snapshot matches but the new
-    * posting no longer lists (changed/deleted docs), a reply consistent
-    * with NEITHER epoch. Stats registries need no epochs: a stale
-    * estimate can only mis-price routing, never change semantics (the
-    * compiled predicate owns them). All mismatches degrade to the
-    * always-correct columnar scan / exact-KNN path. */
-  private val derivedEpochs = scala.collection.concurrent.TrieMap.empty[(String, String, String), Long]
+  /** ANN graph per (index, field), with the [[epochOf]] it was
+    * registered at (the same gate as [[derived]]'s). */
+  private val annIndexes = scala.collection.concurrent.TrieMap.empty[(String, String), (graft.pipeline.Nsw.NswIndex, Long)]
+  /** The derived-state registry: one entry per (index, field,
+    * [[PostingKind]]) holding the posting relation, its planner stats
+    * and the [[epochOf]] at the relation's registration. Either half
+    * may be absent: a relation without stats does not route (the guard
+    * never counts a slice), and stats without a relation still price
+    * FT.INFO `num_terms`.
+    *
+    * The epoch gates routing. The filter stage consults a relation only
+    * when its registration epoch equals the epoch the request captured
+    * BEFORE its catalog read: a reader that snapshotted the OLD docs
+    * just before a createIndex swap must not route through postings
+    * the maintainer re-registered from the NEW corpus — that semi-join
+    * would drop keys the old snapshot matches but the new posting no
+    * longer lists (changed/deleted docs), a reply consistent with
+    * NEITHER epoch. Stats need no epoch: a stale estimate can only
+    * mis-price routing, never change semantics (the compiled predicate
+    * owns them). All mismatches degrade to the always-correct columnar
+    * scan. */
+  private val derived = scala.collection.concurrent.TrieMap.empty[(String, String, PostingKind), SearchEngine.Derived]
   /** Estimated cardinalities of the last query's routed conjuncts, in
     * semi-join order (ascending = min-child first). Planner telemetry
     * for specs; not part of the public surface. */
@@ -332,41 +334,59 @@ class SearchEngine {
       paramParts(opts): _*)
 
   /**
-   * Attach an inverted posting relation ([[graft.text.PostingIndex]])
-   * to a TEXT field. Top-level AND'ed fielded Term predicates then
-   * retrieve by posting lookup + semi-join (the reference's X2
-   * AND-min-child fetch, src/query/search.cc:336-347) instead of
-   * scanning every document's token arrays; all other predicates stay
-   * on the columnar path and verify the fetched set.
+   * Attach a posting relation of `kind` to a field:
+   *
+   *  - [[PostingKind.Term]] (the default, [[graft.text.PostingIndex]]):
+   *    top-level AND'ed fielded Term/TagMatch predicates retrieve by
+   *    posting lookup + semi-join (the reference's X2 AND-min-child
+   *    fetch, src/query/search.cc:336-347) instead of scanning every
+   *    document's token arrays;
+   *  - [[PostingKind.Suffix]] (WITHSUFFIXTRIE): prefix/suffix/infix
+   *    predicates retrieve by pushed-filter posting scan + semi-join;
+   *  - [[PostingKind.Positional]] (WITHOFFSETS, text_index.h:57-88):
+   *    Phrase predicates resolve adjacency posting-side (per-word slices
+   *    chained on `(__key, pos + i)`).
+   *
+   * All other predicates stay on the columnar path and verify the
+   * fetched set. The kind's stats are dropped: they describe the
+   * previous relation.
    */
-  def registerPosting(indexName: String, field: String,
-                      posting: DataFrame): this.type = {
-    postings((indexName, field)) = posting
-    derivedEpochs(("posting", indexName, field)) = epochOf(indexName)
-    postingStats.remove((indexName, field)) // stats describe the OLD relation
-    infoStatsCache.remove(indexName)
+  def registerPosting(indexName: String, field: String, posting: DataFrame,
+                      kind: PostingKind = PostingKind.Term): this.type = {
+    derived((indexName, field, kind)) =
+      SearchEngine.Derived(Some(posting), None, epochOf(indexName))
+    if (kind == PostingKind.Term) infoStatsCache.remove(indexName) // num_terms
     this
   }
 
   /**
-   * Per-term document frequencies for a registered posting — the
-   * analogue of the reference's O(1) posting-list sizes on radix nodes,
-   * which its planner reads for min-child / cardinality decisions
-   * WITHOUT touching the lists. With stats present the routing guard
-   * estimates driver-side (hot map — zero jobs) or from the tiny
-   * persisted stats relation (one pushed point-read); a posting with
-   * NO stats does not route (the guard declines into the
-   * always-correct columnar scan rather than pricing the conjunct
-   * with a data-proportional count job — see [[PostingStats]]).
+   * Per-term counts for a posting of `kind` — the analogue of the
+   * reference's O(1) posting-list sizes on radix nodes, which its
+   * planner reads for min-child / cardinality decisions WITHOUT
+   * touching the lists: document frequencies for Term, distinct-token
+   * frequencies for Suffix (patterns sum the matching tokens' counts),
+   * occurrence counts (≥ document frequency, a sound upper bound) for
+   * Positional. With stats present the routing guard estimates
+   * driver-side (hot map — zero jobs) or from the tiny persisted stats
+   * relation (one pushed point-read); a posting with NO stats does not
+   * route (the guard declines into the always-correct columnar scan
+   * rather than pricing the conjunct with a data-proportional count
+   * job — see [[PostingStats]]). Stats may come before or without a
+   * relation.
    */
   def registerPostingStats(indexName: String, field: String,
                            termCounts: Map[String, Long]): this.type =
     registerPostingStats(indexName, field, PostingStats.hotOnly(termCounts))
 
   def registerPostingStats(indexName: String, field: String,
-                           stats: PostingStats): this.type = {
-    postingStats((indexName, field)) = stats
-    infoStatsCache.remove(indexName) // num_terms may now serve from stats
+                           stats: PostingStats,
+                           kind: PostingKind = PostingKind.Term): this.type = {
+    derived.updateWith((indexName, field, kind)) {
+      case Some(d) => Some(d.copy(stats = Some(stats)))
+      case None => Some(SearchEngine.Derived(None, Some(stats), epochOf(indexName)))
+    }
+    // num_terms may now serve from the term stats
+    if (kind == PostingKind.Term) infoStatsCache.remove(indexName)
     this
   }
 
@@ -394,67 +414,15 @@ class SearchEngine {
     this
   }
 
-  /** Attach a suffix posting ([[graft.text.PostingIndex.buildSuffixes]],
-    * the WITHSUFFIXTRIE analogue) to a TEXT field: prefix/suffix/infix
-    * predicates then retrieve by pushed-filter posting scan + semi-join
-    * instead of scanning every document's token arrays. */
-  def registerSuffixPosting(indexName: String, field: String,
-                            posting: DataFrame): this.type = {
-    suffixPostings((indexName, field)) = posting
-    derivedEpochs(("suffix", indexName, field)) = epochOf(indexName)
-    tokenStats.remove((indexName, field))
-    this
-  }
-
-  /** Distinct-token document frequencies for pattern-cardinality
-    * estimates (prefix/suffix/infix sum the matching tokens' counts). */
-  def registerTokenStats(indexName: String, field: String,
-                         counts: Map[String, Long]): this.type =
-    registerTokenStats(indexName, field, PostingStats.hotOnly(counts))
-
-  def registerTokenStats(indexName: String, field: String,
-                         stats: PostingStats): this.type = {
-    tokenStats((indexName, field)) = stats
-    this
-  }
-
-  /** Attach a positional posting ([[graft.text.PostingIndex
-    * .buildPositions]], the WITHOFFSETS analogue — text_index.h:57-88
-    * keeps word positions in each posting): Phrase predicates then
-    * resolve adjacency posting-side (per-word slices chained on
-    * `(__key, pos + i)`) instead of fetching a superset slice and
-    * reading candidate documents' text. */
-  def registerPositionalPosting(indexName: String, field: String,
-                                posting: DataFrame): this.type = {
-    posPostings((indexName, field)) = posting
-    derivedEpochs(("pos", indexName, field)) = epochOf(indexName)
-    posStats.remove((indexName, field))
-    this
-  }
-
-  /** Per-term OCCURRENCE counts for a positional posting (≥ document
-    * frequency — a sound upper bound for the routing guard). */
-  def registerPositionalStats(indexName: String, field: String,
-                              counts: Map[String, Long]): this.type =
-    registerPositionalStats(indexName, field, PostingStats.hotOnly(counts))
-
-  def registerPositionalStats(indexName: String, field: String,
-                              stats: PostingStats): this.type = {
-    posStats((indexName, field)) = stats
-    this
-  }
-
   /**
    * Build, save (term-sorted layout) and register posting relations
    * for an index's TEXT and TAG fields in one step — the FT.CREATE-
    * driven form of [[registerPosting]], so any index (not just ones a
    * caller hand-built postings for) gets the reference's radix-posting
    * retrieval shape (text_index.h:57-88, tag.h:33-44). `fields`
-   * defaults to every TEXT + TAG field. TEXT fields get a stem posting
-   * (unless NOSTEM — those match original tokens) plus, when
-   * WITHSUFFIXTRIE, a suffix posting for pattern queries; TAG fields
-   * get a normalized-value posting. Per-term/token frequency maps are
-   * collected alongside as planner metadata.
+   * defaults to every TEXT + TAG field; each gets every
+   * [[PostingKind]] that applies to it, under `dir/<kind.sub(alias)>`,
+   * with its stats persisted beside it as planner metadata.
    */
   def buildPostings(indexName: String, dir: String,
                     fields: Seq[String] = Nil,
@@ -462,56 +430,18 @@ class SearchEngine {
     val (schema, docs) = index(indexName)
     val targets =
       if (fields.nonEmpty) fields.map(schema.fieldOrFail)
-      else schema.fields.filter(fd => fd.ftype match {
-        case _: TextField | _: TagField => true
-        case _ => false
-      })
-    def saveLoad(posting: DataFrame, path: String): DataFrame = {
-      graft.text.PostingIndex.save(posting, path, numPartitions)
-      graft.text.PostingIndex.load(docs.sparkSession, path)
-    }
+      else schema.fields.filter(PostingKind.postable)
     targets.foreach { fd =>
-      fd.ftype match {
-        case tf: TextField =>
-          // stem posting — skipped for NOSTEM fields (they match
-          // original tokens; postings hold stem sets)
-          if (!tf.noStem) {
-            val loaded = saveLoad(
-              graft.text.PostingIndex.build(docs, schema, fd.alias),
-              s"$dir/${fd.alias}")
-            registerPosting(indexName, fd.alias, loaded)
-            registerPostingStats(indexName, fd.alias,
-              PostingStats.persist(loaded, s"$dir/${fd.alias}__stats"))
-          }
-          // WITHSUFFIXTRIE (suffix.h): suffix posting for `p*` `*s` `*i*`
-          if (tf.withSuffixTrie) {
-            val sLoaded = saveLoad(
-              graft.text.PostingIndex.buildSuffixes(docs, schema, fd.alias),
-              s"$dir/${fd.alias}__suffix")
-            registerSuffixPosting(indexName, fd.alias, sLoaded)
-            registerTokenStats(indexName, fd.alias, PostingStats.persist(
-              sLoaded.filter(col("full")), s"$dir/${fd.alias}__suffix_stats"))
-          }
-          // WITHOFFSETS (default, ft_create_parser.cc:98-99): positional
-          // posting so phrases resolve adjacency posting-side — the
-          // reference always stores offsets unless NOOFFSETS
-          if (schema.analyzer.withOffsets) {
-            val pLoaded = saveLoad(
-              graft.text.PostingIndex.buildPositions(docs, schema, fd.alias),
-              s"$dir/${fd.alias}__pos")
-            registerPositionalPosting(indexName, fd.alias, pLoaded)
-            registerPositionalStats(indexName, fd.alias,
-              PostingStats.persist(pLoaded, s"$dir/${fd.alias}__pos_stats"))
-          }
-        case _: TagField =>
-          val loaded = saveLoad(
-            graft.text.PostingIndex.buildTags(docs, schema, fd.alias),
-            s"$dir/${fd.alias}")
-          registerPosting(indexName, fd.alias, loaded)
-          registerPostingStats(indexName, fd.alias,
-            PostingStats.persist(loaded, s"$dir/${fd.alias}__stats"))
-        case t => throw new IllegalArgumentException(
-          s"postings need TEXT or TAG, ${fd.alias} is $t")
+      if (!PostingKind.postable(fd)) throw new IllegalArgumentException(
+        s"postings need TEXT or TAG, ${fd.alias} is ${fd.ftype}")
+      PostingKind.values.filter(_.applies(schema, fd)).foreach { kind =>
+        val path = s"$dir/${kind.sub(fd.alias)}"
+        graft.text.PostingIndex.save(kind.build(docs, schema, fd.alias), path,
+          numPartitions)
+        val loaded = graft.text.PostingIndex.load(docs.sparkSession, path)
+        registerPosting(indexName, fd.alias, loaded, kind)
+        registerPostingStats(indexName, fd.alias, PostingStats.persist(
+          kind.statRows(loaded), s"$dir/${kind.statsSub(fd.alias)}"), kind)
       }
     }
     this
@@ -519,46 +449,32 @@ class SearchEngine {
 
   /**
    * Re-attach posting relations previously SAVED by [[buildPostings]]
-   * under `dir` — the restart path (the reference's RDB load restores
-   * its indexes without a rebuild, rdb_serialization.cc): each
-   * `<alias>` / `<alias>__suffix` / `<alias>__pos` subdirectory loads
-   * as the matching posting kind for the field, and the persisted
-   * stats relation (`*__stats`) re-attaches WITHOUT recomputation —
-   * stats survive restart as data. A dir saved before stats
-   * persistence upgrades in place (one small groupBy + tiny write).
+   * or [[saveIndex]] under `dir` — the restart path (the reference's
+   * RDB load restores its indexes without a rebuild,
+   * rdb_serialization.cc): each TEXT/TAG field's [[PostingKind]]
+   * subdirectories that exist load as that kind, and the persisted
+   * stats relation re-attaches WITHOUT recomputation — stats survive
+   * restart as data. A dir saved before stats persistence upgrades in
+   * place (one small groupBy + tiny write).
    */
   def loadPostings(indexName: String, dir: String): this.type = {
     val (schema, docs) = index(indexName)
     val spark = docs.sparkSession
-    def sub(name: String): Option[DataFrame] = {
+    for (fd <- schema.fields if PostingKind.postable(fd);
+         kind <- PostingKind.values) {
+      val path = s"$dir/${kind.sub(fd.alias)}"
       // Hadoop FS probe (not java.io.File): on a non-local scheme a
       // File probe silently sees nothing and the restart attaches no
       // postings — same contract as PostingStore/FsIO.
-      if (graft.util.FsIO.isDir(spark, s"$dir/$name"))
-        Some(graft.text.PostingIndex.load(spark, s"$dir/$name"))
-      else None
-    }
-    def stats(name: String, statRows: => DataFrame): PostingStats =
-      if (graft.util.FsIO.isDir(spark, s"$dir/$name"))
-        PostingStats.fromRelation(PostingStats.load(spark, s"$dir/$name"))
-      else PostingStats.persist(statRows, s"$dir/$name") // pre-stats dir
-    schema.fields.foreach { fd =>
-      if (fd.ftype.isInstanceOf[TextField] || fd.ftype.isInstanceOf[TagField]) {
-        sub(fd.alias).foreach { loaded =>
-          registerPosting(indexName, fd.alias, loaded)
-          registerPostingStats(indexName, fd.alias,
-            stats(s"${fd.alias}__stats", loaded))
-        }
-        sub(s"${fd.alias}__suffix").foreach { loaded =>
-          registerSuffixPosting(indexName, fd.alias, loaded)
-          registerTokenStats(indexName, fd.alias,
-            stats(s"${fd.alias}__suffix_stats", loaded.filter(col("full"))))
-        }
-        sub(s"${fd.alias}__pos").foreach { loaded =>
-          registerPositionalPosting(indexName, fd.alias, loaded)
-          registerPositionalStats(indexName, fd.alias,
-            stats(s"${fd.alias}__pos_stats", loaded))
-        }
+      if (graft.util.FsIO.isDir(spark, path)) {
+        val loaded = graft.text.PostingIndex.load(spark, path)
+        val statsPath = s"$dir/${kind.statsSub(fd.alias)}"
+        registerPosting(indexName, fd.alias, loaded, kind)
+        registerPostingStats(indexName, fd.alias,
+          if (graft.util.FsIO.isDir(spark, statsPath))
+            PostingStats.fromRelation(PostingStats.load(spark, statsPath))
+          else PostingStats.persist(kind.statRows(loaded), statsPath), // pre-stats dir
+          kind)
       }
     }
     this
@@ -575,8 +491,7 @@ class SearchEngine {
    */
   def registerAnn(indexName: String, field: String,
                   ann: graft.pipeline.Nsw.NswIndex): this.type = {
-    annIndexes((indexName, field)) = ann
-    derivedEpochs(("ann", indexName, field)) = epochOf(indexName)
+    annIndexes((indexName, field)) = (ann, epochOf(indexName))
     this
   }
 
@@ -738,24 +653,13 @@ class SearchEngine {
     // this swap building its plan after the maintainer re-registers
     // postings from the NEW corpus — is killed by the registration-
     // epoch gate, not by ordering: every derived relation records the
-    // epoch it was registered at ([[derivedEpochs]]), and filterStage /
+    // epoch it was registered at ([[derived]]), and filterStage /
     // finishSearch only consult relations whose registration epoch
     // equals the epoch the request captured at entry (before its
     // catalog read). A mismatch degrades that conjunct to the columnar
     // scan (or exact KNN), which is correct against whichever docs the
     // reader holds.
-    docCounts.remove(schema.name)
-    infoStatsCache.remove(schema.name)
-    annIndexes.filterInPlace { case ((idx, _), _) => idx != schema.name }
-    postings.filterInPlace { case ((idx, _), _) => idx != schema.name }
-    postingStats.filterInPlace { case ((idx, _), _) => idx != schema.name }
-    suffixPostings.filterInPlace { case ((idx, _), _) => idx != schema.name }
-    tokenStats.filterInPlace { case ((idx, _), _) => idx != schema.name }
-    posPostings.filterInPlace { case ((idx, _), _) => idx != schema.name }
-    posStats.filterInPlace { case ((idx, _), _) => idx != schema.name }
-    layouts.filterInPlace { case ((idx, _), _) => idx != schema.name }
-    derivedEpochs.filterInPlace { case ((_, idx, _), _) => idx != schema.name }
-    keyLayouts.remove(schema.name)
+    dropDerived(schema.name)
     catalog.synchronized { catalog(schema.name) = (schema, stored) }
     // catalog swap, THEN the epoch bump and cache drops (see newEpoch's
     // ordering contract with the cache lookup paths)
@@ -772,21 +676,21 @@ class SearchEngine {
     if (catalog.synchronized { catalog.remove(name) }.isEmpty)
       throw new IllegalArgumentException(s"no such index: $name")
     newEpoch(name)
-    docCounts.remove(name)
-    infoStatsCache.remove(name)
     infoDocs.remove(name)
     buildStates.remove(name)
+    dropDerived(name)
+  }
+
+  /** Drop everything derived from an index's registered relation:
+    * memoized counts, postings with their stats, ANN graphs and layout
+    * hints ([[createIndex]] before a swap, [[dropIndex]] after). */
+  private def dropDerived(name: String): Unit = {
+    docCounts.remove(name)
+    infoStatsCache.remove(name)
     annIndexes.filterInPlace { case ((idx, _), _) => idx != name }
-    postings.filterInPlace { case ((idx, _), _) => idx != name }
-    postingStats.filterInPlace { case ((idx, _), _) => idx != name }
-    suffixPostings.filterInPlace { case ((idx, _), _) => idx != name }
-    tokenStats.filterInPlace { case ((idx, _), _) => idx != name }
-    posPostings.filterInPlace { case ((idx, _), _) => idx != name }
-    posStats.filterInPlace { case ((idx, _), _) => idx != name }
+    derived.filterInPlace { case ((idx, _, _), _) => idx != name }
     layouts.filterInPlace { case ((idx, _), _) => idx != name }
-    derivedEpochs.filterInPlace { case ((_, idx, _), _) => idx != name }
     keyLayouts.remove(name)
-    ()
   }
 
   /** FT._LIST analogue. */
@@ -903,29 +807,24 @@ class SearchEngine {
         case And(cs) => cs
         case p => Seq(p)
       }
-      // One consistent snapshot of each derived-state registry per plan
+      // One consistent snapshot of the derived-state registry per plan
       // build (TrieMap snapshots are O(1)): a maintainer batch
       // re-registering concurrently (createIndex drops postings/stats,
       // onBatch re-adds them) must degrade a conjunct to the
       // always-correct scan path — it must never crash plan
       // construction between a routability check and the lookup it
-      // guards (the SocketMaintainSpec reader race). Shadowing the
-      // fields keeps every helper below on the snapshot.
-      val postings = this.postings.readOnlySnapshot()
-      val postingStats = this.postingStats.readOnlySnapshot()
-      val suffixPostings = this.suffixPostings.readOnlySnapshot()
-      val tokenStats = this.tokenStats.readOnlySnapshot()
-      val posPostings = this.posPostings.readOnlySnapshot()
-      val posStats = this.posStats.readOnlySnapshot()
-      val derivedEpochs = this.derivedEpochs.readOnlySnapshot()
+      // guards (the SocketMaintainSpec reader race).
+      val derived = this.derived.readOnlySnapshot()
       // Registration-epoch gate (the createIndex inverse-mix contract):
-      // a derived relation is consulted only when it was registered at
-      // the epoch THIS request captured at entry — a reader holding the
+      // a relation is consulted only when it was registered at the
+      // epoch THIS request captured at entry — a reader holding the
       // pre-swap docs must not semi-join postings rebuilt from the new
       // corpus (it would drop keys its snapshot matches). Mismatch =
       // the conjunct keeps the always-correct columnar scan.
-      def fresh(kind: String, f: String): Boolean =
-        derivedEpochs.get((kind, schema.name, f)).contains(ep)
+      def rel(kind: PostingKind, f: String): Option[DataFrame] =
+        derived.get((schema.name, f, kind)).filter(_.epoch == ep).flatMap(_.rel)
+      def stats(kind: PostingKind, f: String): Option[PostingStats] =
+        derived.get((schema.name, f, kind)).flatMap(_.stats)
       def postingFields(field: Option[String]): Option[Seq[String]] = {
         // postings hold the STEM sets — only routable when the query
         // stems too (not VERBATIM) and no target field is NOSTEM
@@ -936,16 +835,14 @@ class SearchEngine {
         }
         field match {
           case Some(f) =>
-            if (postings.contains((schema.name, f)) && fresh("posting", f) &&
-                stemMatched(f)) Some(Seq(f))
+            if (rel(PostingKind.Term, f).isDefined && stemMatched(f)) Some(Seq(f))
             else None
           case None =>
             // unfielded term = OR over ALL text fields: routable only when
             // every text field has a posting (keys = union of lookups)
             val tfs = schema.textFields.map(_.alias)
             if (tfs.nonEmpty && tfs.forall(f =>
-                postings.contains((schema.name, f)) && fresh("posting", f) &&
-                stemMatched(f)))
+                rel(PostingKind.Term, f).isDefined && stemMatched(f)))
               Some(tfs)
             else None
         }
@@ -953,7 +850,7 @@ class SearchEngine {
       def termKeys(f: Option[String], w: String): DataFrame = {
         val stemmed = Analyzer.stemToken(Analyzer.caseFold(w, analyzerCfg), analyzerCfg)
         postingFields(f).get
-          .map(fa => postings((schema.name, fa))
+          .map(fa => rel(PostingKind.Term, fa).get
             .filter(col("term") === stemmed)
             .select(col("__key").as(schema.keyColumn)))
           .reduce(_ unionByName _)
@@ -972,7 +869,7 @@ class SearchEngine {
         }.reduce(_ || _)
         // no distinct(): left_semi tolerates duplicate keys, and the
         // dedup shuffle would cost more than it saves
-        postings((schema.name, f)).filter(cond)
+        rel(PostingKind.Term, f).get.filter(cond)
           .select(col("__key").as(schema.keyColumn))
       }
       // Suffix-posting routing (WITHSUFFIXTRIE, reference suffix.h):
@@ -983,8 +880,7 @@ class SearchEngine {
       // the field mask the same way).
       def allHavePostings(tfs: Seq[String]): Option[Seq[String]] =
         if (tfs.nonEmpty &&
-            tfs.forall(f => suffixPostings.contains((schema.name, f)) &&
-              fresh("suffix", f)))
+            tfs.forall(f => rel(PostingKind.Suffix, f).isDefined))
           Some(tfs)
         else None
       def suffixFields(field: Option[String]): Option[Seq[String]] = field match {
@@ -1005,7 +901,7 @@ class SearchEngine {
       }
       def suffixKeys(fields: Seq[String])(cond: Column): DataFrame =
         fields
-          .map(fa => suffixPostings((schema.name, fa)).filter(cond)
+          .map(fa => rel(PostingKind.Suffix, fa).get.filter(cond)
             .select(col("__key").as(schema.keyColumn)))
           .reduce(_ unionByName _)
       // Positional route (WITHOFFSETS postings — the reference keeps
@@ -1016,8 +912,7 @@ class SearchEngine {
       def phraseFields(field: Option[String]): Option[Seq[String]] = {
         val tfs = field.map(Seq(_)).getOrElse(schema.textFields.map(_.alias))
         if (tfs.nonEmpty &&
-            tfs.forall(f => posPostings.contains((schema.name, f)) &&
-              fresh("pos", f)))
+            tfs.forall(f => rel(PostingKind.Positional, f).isDefined))
           Some(tfs)
         else None
       }
@@ -1033,10 +928,10 @@ class SearchEngine {
       def phraseKeys(fields: Seq[String], words: Seq[String]): DataFrame = {
         val folded = words.map(w => Analyzer.caseFold(w, analyzerCfg))
         fields.map { fa =>
-          val pp = posPostings((schema.name, fa))
+          val pp = rel(PostingKind.Positional, fa).get
           // rarest-first ordering from the HOT stats only — ordering is
           // a best-effort optimization, never worth point-read jobs
-          val order = posStats.get((schema.name, fa)).flatMap(_.hot) match {
+          val order = stats(PostingKind.Positional, fa).flatMap(_.hot) match {
             case Some(m) => folded.indices.sortBy(i => m.getOrElse(folded(i), 0L))
             case None => folded.indices
           }
@@ -1062,7 +957,7 @@ class SearchEngine {
             // TAG postings (reference tag radix postings, tag.h:33-44):
             // a registered tag posting serves both exact and prefix
             // patterns — stored terms are already normalized.
-            if postings.contains((schema.name, f)) && fresh("posting", f) &&
+            if rel(PostingKind.Term, f).isDefined &&
               schema.fieldOrFail(f).ftype.isInstanceOf[TagField] =>
           Some(tagKeys(f, patterns))
         // Pattern classes over the suffix posting — each a pushed
@@ -1127,7 +1022,7 @@ class SearchEngine {
       def patternEstimate(fields: Seq[String], v: String,
                           m: (String, String) => Boolean,
                           dataPred: Column): Option[Long] = {
-        val per = fields.map(fa => tokenStats.get((schema.name, fa))
+        val per = fields.map(fa => stats(PostingKind.Suffix, fa)
           .flatMap(_.matchSum(t => m(t, v), dataPred)))
         if (per.forall(_.isDefined)) Some(per.flatten.sum) else None
       }
@@ -1135,11 +1030,11 @@ class SearchEngine {
         case Term(f, w) =>
           val stemmed = Analyzer.stemToken(Analyzer.caseFold(w, analyzerCfg), analyzerCfg)
           val fields = postingFields(f).get
-          val perField = fields.map(fa => postingStats.get((schema.name, fa))
+          val perField = fields.map(fa => stats(PostingKind.Term, fa)
             .flatMap(_.lookup(stemmed)))
           if (perField.forall(_.isDefined)) Some(perField.flatten.sum) else None
         case TagMatch(f, patterns) =>
-          postingStats.get((schema.name, f)).flatMap { stats =>
+          stats(PostingKind.Term, f).flatMap { stats =>
             val cs = schema.fieldOrFail(f).ftype match {
               case TagField(_, c) => c
               case _ => false
@@ -1171,7 +1066,7 @@ class SearchEngine {
           val fields = phraseFields(f).get
           val per = words.map(w => Analyzer.caseFold(w, analyzerCfg)).map { w =>
             val counts = fields.map(fa =>
-              posStats.get((schema.name, fa)).flatMap(_.lookup(w)))
+              stats(PostingKind.Positional, fa).flatMap(_.lookup(w)))
             if (counts.forall(_.isDefined)) Some(counts.flatten.sum) else None
           }
           if (per.nonEmpty && per.forall(_.isDefined)) Some(per.flatten.min)
@@ -1197,11 +1092,20 @@ class SearchEngine {
       // so the tightest slice prunes the probe side before the wider
       // ones run. A conjunct whose estimate is unavailable (no stats
       // in either tier) stays on the scan path.
-      val routed = conjuncts
-        .flatMap(c => for { keys <- keysFor(c); est <- statEstimate(c) }
-          yield (keys, est))
-        .filter(_._2 <= maxKeys)
-        .sortBy(_._2)
+      // Each conjunct's routing outcome is counted: routed, a route the
+      // guard rejected (estimate missing or over maxKeys), or no route.
+      val routed = conjuncts.flatMap { c =>
+        keysFor(c) match {
+          case None =>
+            Metrics.postingScan.incrementAndGet(); None
+          case Some(keys) => statEstimate(c).filter(_ <= maxKeys) match {
+            case Some(est) =>
+              Metrics.postingRouted.incrementAndGet(); Some((keys, est))
+            case None =>
+              Metrics.postingGuardRejected.incrementAndGet(); None
+          }
+        }
+      }.sortBy(_._2)
       lastRouteEstimates = routed.map(_._2)
       routed.foreach { case (keys, _) =>
         df = df.join(keys, Seq(schema.keyColumn), "left_semi")
@@ -1296,7 +1200,7 @@ class SearchEngine {
         // threshold) the filter is selective, so the full count costs
         // what the old short-circuit probe did anyway.
         val ann = annIndexes.get((indexName, knn.field))
-          .filter(_ => derivedEpochs.get(("ann", indexName, knn.field)).contains(ep))
+          .collect { case (idx, regEp) if regEp == ep => idx }
         val qualifiedKeys: Option[(DataFrame, Long)] =
           if (ann.isDefined && !parsed.isMatchAll) {
             // cache-private for the same reason as knnReply's base: the
@@ -1597,11 +1501,12 @@ class SearchEngine {
       // the page draws from the SAME truncated set the total counted
       val page = finishSearch(indexName, schema, base.limit(cap), parsed, opts, ep)
       val collected = page.collect()
-      // Temporary anomaly forensics (r13 soak finding: page collected
-      // empty while the total counted; retry healed). Enabled only by
-      // the soak/probes — pinpoints WHICH read went empty.
-      if (SearchEngine.debugEmptyPage && collected.isEmpty && n > 0 &&
-          opts.limit._1 == 0 && opts.limit._2 > 0) {
+      // Page invariant (r13 soak finding: a page collected empty while
+      // the total counted; retry healed): a first page with room can
+      // only be empty when nothing matched. A violation throws a
+      // diagnostic naming WHICH read went empty; the check costs
+      // nothing unless it fires.
+      if (collected.isEmpty && n > 0 && opts.limit._1 == 0 && opts.limit._2 > 0) {
         val n2 = base.count()
         val again = page.collect().length
         val fresh = filterStage(schema, docs, parsed, opts, ep).count()
@@ -1845,7 +1750,7 @@ class SearchEngine {
     if (schema.textFields.isEmpty) 0L
     else {
       val sts = schema.textFields.map(fd =>
-        postingStats.get((schema.name, fd.alias)))
+        derived.get((schema.name, fd.alias, PostingKind.Term)).flatMap(_.stats))
       if (sts.forall(_.isDefined)) {
         val unis = sts.flatten.map(_.termUniverse)
         if (unis.forall(_.isLeft))
@@ -1976,12 +1881,11 @@ class SearchEngine {
       // per-attribute attached index structures (the reference's FT.INFO
       // attribute blocks name each field's index; here the derived
       // relations are opt-in, so surface which ones are registered)
-      val attached = Seq(
-        postings.contains((indexName, fd.alias)) -> "posting",
-        suffixPostings.contains((indexName, fd.alias)) -> "suffix_posting",
-        posPostings.contains((indexName, fd.alias)) -> "positional_posting",
-        annIndexes.contains((indexName, fd.alias)) -> "ann_graph")
-        .collect { case (true, n) => n }.mkString(",")
+      val attached = (PostingKind.values
+        .filter(k => derived.get((indexName, fd.alias, k)).exists(_.rel.isDefined))
+        .map(_.label) ++
+        (if (annIndexes.contains((indexName, fd.alias))) Seq("ann_graph") else Nil))
+        .mkString(",")
       (indexName, fd.alias, fd.identifier, ftype, stats.getLong(i + 1), attached)
     }
     val bs = buildState(indexName)
@@ -2059,28 +1963,15 @@ class SearchEngine {
     val spark = docs.sparkSession
     docs.write.mode("overwrite").parquet(s"$path/data")
     graft.util.FsIO.writeObjAtomic(spark, s"$path/schema.bin", schema)
-    // subdir names MUST match what loadPostings probes: <a>/<a>__stats,
-    // <a>__suffix/<a>__suffix_stats, <a>__pos/<a>__pos_stats
-    def savePosting(p: DataFrame, sub: String, statsSub: String,
-                    stats: Option[PostingStats]): Unit = {
-      graft.text.PostingIndex.save(p, s"$path/postings/$sub")
-      stats.foreach(st =>
-        PostingStats.save(st.countsRelation(spark),
-          s"$path/postings/$statsSub"))
+    // the layout loadPostings re-attaches: PostingKind's names
+    for (fd <- schema.fields; kind <- PostingKind.values;
+         d <- derived.get((indexName, fd.alias, kind)); p <- d.rel) {
+      graft.text.PostingIndex.save(p, s"$path/postings/${kind.sub(fd.alias)}")
+      d.stats.foreach(st => PostingStats.save(st.countsRelation(spark),
+        s"$path/postings/${kind.statsSub(fd.alias)}"))
     }
-    schema.fields.foreach { fd =>
-      val a = fd.alias
-      postings.get((indexName, a)).foreach(p =>
-        savePosting(p, a, s"${a}__stats", postingStats.get((indexName, a))))
-      suffixPostings.get((indexName, a)).foreach(p =>
-        savePosting(p, s"${a}__suffix", s"${a}__suffix_stats",
-          tokenStats.get((indexName, a))))
-      posPostings.get((indexName, a)).foreach(p =>
-        savePosting(p, s"${a}__pos", s"${a}__pos_stats",
-          posStats.get((indexName, a))))
-      annIndexes.get((indexName, a)).foreach(ann =>
-        graft.pipeline.Nsw.save(ann, s"$path/ann/$a"))
-    }
+    for (fd <- schema.fields; (ann, _) <- annIndexes.get((indexName, fd.alias)))
+      graft.pipeline.Nsw.save(ann, s"$path/ann/${fd.alias}")
   }
 
   /** Execute with cooperative cancellation (reference R5 TIMEOUT,

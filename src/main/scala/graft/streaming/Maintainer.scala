@@ -7,7 +7,7 @@ import graft.engine.SearchEngine
 import graft.model._
 import graft.pipeline.Nsw
 import graft.sources.Documents
-import graft.text.{PostingIndex, PostingStore}
+import graft.text.{PostingKind, PostingStore}
 
 /**
  * Derived-index maintenance for one index under continuous ingest —
@@ -20,8 +20,9 @@ import graft.text.{PostingIndex, PostingStore}
  * Per deduped change batch (latest op per key — [[Ingest.dedupePerKey]]
  * shape, original change-feed columns):
  *
- *  - every attached [[PostingStore]] (TEXT or TAG field) receives the
- *    batch's posting rows + changed keys ([[PostingStore.applyBatch]],
+ *  - every attached [[PostingStore]] — one per (field, [[PostingKind]]):
+ *    term, suffix or positional — receives the batch's posting rows
+ *    (the kind's builder) + changed keys ([[PostingStore.applyBatch]],
  *    O(|batch| + segments), never O(corpus)), auto-compacts once the
  *    delta + tombstone segments exceed `compactRowThreshold` (the LSM
  *    policy: lookups pay O(segments) on top of the pruned main scan,
@@ -49,11 +50,10 @@ object IndexMaintainer {
    * at FT.CREATE time and keeping them fresh per keyspace event
    * (index_schema.cc:964 fans each mutation to every attribute index):
    *
-   *  - TAG fields and stemmed TEXT fields → a term [[PostingStore]]
-   *    under `dir/<alias>` (NOSTEM text matches original tokens, which
-   *    postings — stem sets — cannot serve: skipped);
-   *  - WITHSUFFIXTRIE text fields → a suffix store under
-   *    `dir/<alias>__suffix`;
+   *  - every (field, [[PostingKind]]) the kind applies to → a
+   *    [[PostingStore]] under `dir/<kind.sub(alias)>`: term stores for
+   *    TAG and stemmed TEXT fields, suffix stores for WITHSUFFIXTRIE
+   *    fields, positional stores for TEXT fields under WITHOFFSETS;
    *  - VECTOR fields → an NSW graph built with the field's declared
    *    M / EF_CONSTRUCTION / metric.
    *
@@ -65,37 +65,11 @@ object IndexMaintainer {
                numPartitions: Int = 32): IndexMaintainer = {
     val (schema, docs) = engine.index(indexName)
     val spark = docs.sparkSession
-    def store(alias: String, posting: DataFrame, sub: String = "") =
-      PostingStore.init(spark, posting, s"$dir/$alias$sub", numPartitions)
-    val termStores = schema.fields.flatMap { fd =>
-      fd.ftype match {
-        case _: TagField =>
-          Some(fd.alias -> store(fd.alias,
-            PostingIndex.buildTags(docs, schema, fd.alias)))
-        case tf: TextField if !tf.noStem =>
-          Some(fd.alias -> store(fd.alias,
-            PostingIndex.build(docs, schema, fd.alias)))
-        case _ => None
-      }
-    }.toMap
-    val sfxStores = schema.fields.collect {
-      case fd if (fd.ftype match {
-        case tf: TextField => tf.withSuffixTrie
-        case _ => false
-      }) =>
-        fd.alias -> store(fd.alias,
-          PostingIndex.buildSuffixes(docs, schema, fd.alias), "__suffix")
-    }.toMap
-    // WITHOFFSETS (the default): positional postings so phrases resolve
-    // adjacency posting-side (text_index.h:57-88 keeps offsets in RAM;
-    // NOOFFSETS indexes reject phrases, so no store to maintain)
-    val posStores =
-      if (!schema.analyzer.withOffsets) Map.empty[String, PostingStore]
-      else schema.fields.collect {
-        case fd if fd.ftype.isInstanceOf[TextField] =>
-          fd.alias -> store(fd.alias,
-            PostingIndex.buildPositions(docs, schema, fd.alias), "__pos")
-      }.toMap
+    val stores = (for (fd <- schema.fields; kind <- PostingKind.values
+                       if kind.applies(schema, fd))
+      yield (fd.alias, kind) -> PostingStore.init(spark,
+        kind.build(docs, schema, fd.alias), s"$dir/${kind.sub(fd.alias)}",
+        numPartitions)).toMap
     val graphs = schema.fields.collect {
       case fd if fd.ftype.isInstanceOf[VectorField] =>
         val vf = fd.ftype.asInstanceOf[VectorField]
@@ -108,9 +82,8 @@ object IndexMaintainer {
           metric = vf.metric.name, numPartitions = numPartitions,
           m = vf.hnswM, efConstruction = vf.efConstruction)
     }.toMap
-    val m = new IndexMaintainer(engine, indexName, schema, termStores, graphs,
-      docsSource, compactRowThreshold, sfxStores, posStores,
-      statsDir = Some(dir)).register()
+    val m = new IndexMaintainer(engine, indexName, schema, stores, graphs,
+      docsSource, compactRowThreshold, statsDir = Some(dir)).register()
     // record the build-time watermark so a restart BEFORE the first
     // saveAnn still knows its replay point (= everything after build)
     if (graphs.nonEmpty) m.saveAnn(dir)
@@ -132,22 +105,11 @@ object IndexMaintainer {
                 compactRowThreshold: Long = 100000): IndexMaintainer = {
     val (schema, docs) = engine.index(indexName)
     val spark = docs.sparkSession
-    def open(sub: String): Option[PostingStore] = {
-      if (graft.util.FsIO.exists(spark, s"$dir/$sub/MANIFEST"))
-        Some(PostingStore.open(spark, s"$dir/$sub"))
-      else None
-    }
-    val termStores = schema.fields.flatMap { fd =>
-      fd.ftype match {
-        case _: TagField => open(fd.alias).map(fd.alias -> _)
-        case tf: TextField if !tf.noStem => open(fd.alias).map(fd.alias -> _)
-        case _ => None
-      }
-    }.toMap
-    val sfxStores = schema.fields.flatMap(fd =>
-      open(s"${fd.alias}__suffix").map(fd.alias -> _)).toMap
-    val posStores = schema.fields.flatMap(fd =>
-      open(s"${fd.alias}__pos").map(fd.alias -> _)).toMap
+    val stores = (for (fd <- schema.fields if PostingKind.postable(fd);
+                       kind <- PostingKind.values;
+                       sub = s"$dir/${kind.sub(fd.alias)}"
+                       if graft.util.FsIO.exists(spark, s"$sub/MANIFEST"))
+      yield (fd.alias, kind) -> PostingStore.open(spark, sub)).toMap
     // the replay watermark names the live checkpoint version
     val checkpointSeq: Option[Long] = graft.util.FsIO
       .readObj[java.lang.Long](spark, s"$dir/ann_seq.bin").map(_.longValue())
@@ -167,9 +129,8 @@ object IndexMaintainer {
             s"for vector field ${fd.alias}")
       }.toMap
     }.getOrElse(Map.empty)
-    val m = new IndexMaintainer(engine, indexName, schema, termStores, graphs,
-      docsSource, compactRowThreshold, sfxStores, posStores,
-      statsDir = Some(dir))
+    val m = new IndexMaintainer(engine, indexName, schema, stores, graphs,
+      docsSource, compactRowThreshold, statsDir = Some(dir))
     // restore the durable doc LSM BEFORE register(): adoption
     // re-registers the composed relation via createIndex, which drops
     // derived state — the same createIndex-then-register order as
@@ -196,19 +157,14 @@ final class IndexMaintainer(
     engine: SearchEngine,
     indexName: String,
     schema: IndexSchema,
-    postingStores: Map[String, PostingStore] = Map.empty,
+    // One store per (field, kind) with a registered posting: without
+    // one, the posting would go stale under ingest and its routes would
+    // MISS new documents (fetch-then-verify can drop false positives
+    // but cannot resurrect unfetched keys).
+    stores: Map[(String, PostingKind), PostingStore] = Map.empty,
     annIndexes: Map[String, Nsw.NswIndex] = Map.empty,
     docsSource: Option[() => DataFrame] = None,
     compactRowThreshold: Long = 100000,
-    // Suffix-posting stores (WITHSUFFIXTRIE fields): maintained like
-    // the term stores but from buildSuffixes rows; without one, a
-    // registered suffix posting would go stale under ingest and
-    // pattern routing would MISS new documents (fetch-then-verify can
-    // drop false positives but cannot resurrect unfetched keys).
-    suffixStores: Map[String, PostingStore] = Map.empty,
-    // Positional stores (WITHOFFSETS fields): same staleness argument —
-    // a stale positional posting would miss new documents' phrases.
-    positionalStores: Map[String, PostingStore] = Map.empty,
     // Where guard stats persist as data (tiny term-sorted parquet per
     // field/kind) so vocabularies past the hot cap still route via
     // point-reads instead of falling off the stats path. forIndex/
@@ -442,8 +398,9 @@ final class IndexMaintainer(
       true
     }
 
-  /** Per-field guard stats for the maintained views, two-tier like
-    * [[graft.engine.PostingStats]]:
+  /** Per-field guard stats for the maintained views of one
+    * [[PostingKind]] (counting the kind's `statRows`, published as the
+    * kind's engine stats), two-tier like [[graft.engine.PostingStats]]:
     *
     *  - HOT map (vocabulary ≤ hotCap): exact at [[register]] and after
     *    each compaction; between compactions [[onBatch]] adds the
@@ -463,8 +420,7 @@ final class IndexMaintainer(
     * (+overlay) instead of counting a posting slice — the round-4
     * scale fix. No statsDir + past the cap ⇒ the field's conjuncts
     * stay on the scan path (hand-wired test maintainers). */
-  private final class GuardStats(kind: String,
-                                 publish: (String, graft.engine.PostingStats) => Unit) {
+  private final class GuardStats(kind: PostingKind) {
     val hot = scala.collection.mutable.HashMap.empty[String, Map[String, Long]]
     private val overlays = scala.collection.mutable.HashMap.empty[String, Map[String, Long]]
     private val rels = scala.collection.mutable.HashMap.empty[String, DataFrame]
@@ -473,9 +429,12 @@ final class IndexMaintainer(
     def tracks(field: String): Boolean =
       hot.contains(field) || rels.contains(field)
 
-    private def publishNow(field: String): Unit =
-      publish(field, graft.engine.PostingStats(hot.get(field), rels.get(field),
-        () => overlays.getOrElse(field, Map.empty)))
+    private def publishNow(field: String): Unit = {
+      engine.registerPostingStats(indexName, field,
+        graft.engine.PostingStats(hot.get(field), rels.get(field),
+          () => overlays.getOrElse(field, Map.empty)), kind)
+      ()
+    }
 
     private def merge(m0: Map[String, Long],
                       adds: Array[(String, Long)]): Map[String, Long] =
@@ -489,7 +448,7 @@ final class IndexMaintainer(
       overlays.remove(field)
       statsDir match {
         case Some(d) =>
-          val base = s"$d/$field$kind" + "__stats"
+          val base = s"$d/${kind.guardStatsSub(field)}"
           val g = gen.getOrElse(field, -1) + 1
           PostingStats.save(PostingStats.compute(statRows), s"$base/g$g")
           // one superseded generation stays for reader grace
@@ -525,33 +484,28 @@ final class IndexMaintainer(
         publishNow(field)
       }
   }
-  private val termStats = new GuardStats("",
-    (f, s) => { engine.registerPostingStats(indexName, f, s); () })
-  private val tokenStats = new GuardStats("__suffix",
-    (f, s) => { engine.registerTokenStats(indexName, f, s); () })
-  private val positionStats = new GuardStats("__pos",
-    (f, s) => { engine.registerPositionalStats(indexName, f, s); () })
+  private val guards = PostingKind.values.map(k => k -> new GuardStats(k)).toMap
 
-  /** Apply one batch's rows to a store: stats sample before the rows
-    * are consumed, LSM apply, threshold compaction, view + stats
-    * re-registration. Shared by the term/tag and suffix paths. */
-  private def maintainStore(field: String, store: PostingStore,
-                            rows: DataFrame, changedKeys: DataFrame,
-                            stats: GuardStats, statRows: DataFrame => DataFrame,
-                            registerView: DataFrame => Unit): Unit = {
+  /** Apply one batch's posting rows to a store: stats sample before the
+    * rows are consumed, LSM apply, threshold compaction, view + stats
+    * re-registration. */
+  private def maintainStore(field: String, kind: PostingKind,
+                            store: PostingStore, rows: DataFrame,
+                            changedKeys: DataFrame): Unit = {
+    val stats = guards(kind)
     // batch term counts BEFORE applyBatch consumes the rows (small:
     // O(|batch| vocabulary) on the driver, like the reference bumping
     // its radix posting sizes per mutation)
     val batchCounts =
       if (stats.tracks(field))
-        statRows(rows).groupBy(col("term")).count().collect()
+        kind.statRows(rows).groupBy(col("term")).count().collect()
           .map(r => r.getString(0) -> r.getLong(1))
       else Array.empty[(String, Long)]
     store.applyBatch(rows, changedKeys)
     val compacted = store.deltaSize + store.tombSize >= compactRowThreshold
     if (compacted) store.compact()
-    registerView(store.view)
-    if (compacted) stats.exact(field, statRows(store.view))
+    engine.registerPosting(indexName, field, store.view, kind)
+    if (compacted) stats.exact(field, kind.statRows(store.view))
     else stats.add(field, batchCounts)
   }
 
@@ -623,17 +577,9 @@ final class IndexMaintainer(
   /** Register the initial views/graphs with the engine (call once,
     * before the stream starts — queries work from the first batch on). */
   def register(): this.type = {
-    postingStores.foreach { case (f, s) =>
-      engine.registerPosting(indexName, f, s.view)
-      termStats.exact(f, s.view)
-    }
-    suffixStores.foreach { case (f, s) =>
-      engine.registerSuffixPosting(indexName, f, s.view)
-      tokenStats.exact(f, s.view.filter(col("full")))
-    }
-    positionalStores.foreach { case (f, s) =>
-      engine.registerPositionalPosting(indexName, f, s.view)
-      positionStats.exact(f, s.view)
+    stores.foreach { case ((f, kind), s) =>
+      engine.registerPosting(indexName, f, s.view, kind)
+      guards(kind).exact(f, kind.statRows(s.view))
     }
     ann.foreach { case (f, idx) => engine.registerAnn(indexName, f, idx) }
     this
@@ -641,8 +587,7 @@ final class IndexMaintainer(
 
   /** The `onBatch` hook for [[Ingest.start]]. */
   def onBatch(batch: DataFrame): Unit = {
-    if (postingStores.isEmpty && suffixStores.isEmpty && ann.isEmpty &&
-        positionalStores.isEmpty && docsSource.isEmpty) return
+    if (stores.isEmpty && ann.isEmpty && docsSource.isEmpty) return
     val upserts = batch.filter(col("op") === "upsert").drop("op", "__seq")
     val enriched = enrichDocs(upserts)
     val changedKeys = batch.select(col("__key").cast("string").as("__key"))
@@ -666,33 +611,9 @@ final class IndexMaintainer(
       ()
     }
 
-    postingStores.foreach { case (field, store) =>
-      val rows = schema.fieldOrFail(field).ftype match {
-        case _: TextField => PostingIndex.build(enriched, schema, field)
-        case _: TagField => PostingIndex.buildTags(enriched, schema, field)
-        case t => throw new IllegalArgumentException(
-          s"posting maintenance needs TEXT or TAG, $field is $t")
-      }
-      maintainStore(field, store, rows, changedKeys, termStats, identity,
-        v => { engine.registerPosting(indexName, field, v); () })
-    }
-
-    suffixStores.foreach { case (field, store) =>
-      require(schema.fieldOrFail(field).ftype.isInstanceOf[TextField],
-        s"suffix maintenance needs TEXT, $field is not")
-      maintainStore(field, store,
-        PostingIndex.buildSuffixes(enriched, schema, field), changedKeys,
-        tokenStats, _.filter(col("full")),
-        v => { engine.registerSuffixPosting(indexName, field, v); () })
-    }
-
-    positionalStores.foreach { case (field, store) =>
-      require(schema.fieldOrFail(field).ftype.isInstanceOf[TextField],
-        s"positional maintenance needs TEXT, $field is not")
-      maintainStore(field, store,
-        PostingIndex.buildPositions(enriched, schema, field), changedKeys,
-        positionStats, identity,
-        v => { engine.registerPositionalPosting(indexName, field, v); () })
+    stores.foreach { case ((field, kind), store) =>
+      maintainStore(field, kind, store, kind.build(enriched, schema, field),
+        changedKeys)
     }
 
     ann.keys.toSeq.foreach { field =>

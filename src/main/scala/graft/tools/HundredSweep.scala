@@ -225,7 +225,7 @@ object HundredSweep {
       val store = graft.text.PostingStore.init(spark,
         graft.text.PostingIndex.build(enriched, schema, "text"), storeDir)
       val m = new graft.streaming.IndexMaintainer(e, "documents_m", schema,
-        postingStores = Map("text" -> store),
+        stores = Map(("text", graft.text.PostingKind.Term) -> store),
         docsSource = Some(() => relation())).register()
       (state, m, e)
     })

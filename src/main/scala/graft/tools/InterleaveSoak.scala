@@ -3,11 +3,11 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-import graft.engine.{SearchEngine, SearchOptions}
+import graft.engine.{PostingStats, SearchEngine, SearchOptions}
 import graft.model._
 import graft.query.VectorParam
 import graft.sources.Documents
-import graft.text.PostingIndex
+import graft.text.{PostingIndex, PostingKind}
 
 /**
  * Seeded interleaving soak (round-12 verdict item 2): one writer
@@ -91,12 +91,14 @@ object InterleaveSoak {
     e.registerPosting("soak_t", "body", p)
     e.registerPostingStats("soak_t", "body", counts(p))
     val sfx = PostingIndex.buildSuffixes(docs, schema, "body")
-    e.registerSuffixPosting("soak_t", "body", sfx)
-    e.registerTokenStats("soak_t", "body",
-      counts(sfx.filter(org.apache.spark.sql.functions.col("full"))))
+    e.registerPosting("soak_t", "body", sfx, PostingKind.Suffix)
+    e.registerPostingStats("soak_t", "body",
+      PostingStats.hotOnly(counts(PostingKind.Suffix.statRows(sfx))),
+      PostingKind.Suffix)
     val pos = PostingIndex.buildPositions(docs, schema, "body")
-    e.registerPositionalPosting("soak_t", "body", pos)
-    e.registerPositionalStats("soak_t", "body", counts(pos))
+    e.registerPosting("soak_t", "body", pos, PostingKind.Positional)
+    e.registerPostingStats("soak_t", "body", PostingStats.hotOnly(counts(pos)),
+      PostingKind.Positional)
     val tags = PostingIndex.buildTags(docs, schema, "cat")
     e.registerPosting("soak_t", "cat", tags)
     e.registerPostingStats("soak_t", "cat", counts(tags))
@@ -156,7 +158,6 @@ object InterleaveSoak {
     val e = new SearchEngine
     e.postingRouteMaxSelectivity = 1.0 // force every routable conjunct
     if (noDerived) { e.replyCache.maxEntries = 0; e.baseCache.maxEntries = 0 }
-    SearchEngine.debugEmptyPage = true // r13 anomaly forensics
     registerVersion(spark, e, 1, noDerived)
     val lastStarted = new AtomicInteger(1)
     val lastCompleted = new AtomicInteger(1)

@@ -146,8 +146,11 @@ class EngineAdminSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the embeddings index
     val sp = spark; import sp.implicits._
     val e1 = new SearchEngine
+    // WITHSUFFIXTRIE: every posting kind (term, suffix, positional) is
+    // built, saved and reloaded
     val docSchema = IndexSchema("sl_docs", Seq(
-      FieldDef("lang", TagField()), FieldDef("text", TextField())))
+      FieldDef("lang", TagField()),
+      FieldDef("text", TextField(withSuffixTrie = true))))
     val corpus = ((1 to 40).map(i => (i.toLong, "en", s"common filler text number $i")) :+
       (99L, "en", "the rareword appears once")).toDF("doc_id", "lang", "text")
     e1.createIndex(docSchema, graft.sources.Documents.enrich(
@@ -177,7 +180,8 @@ class EngineAdminSpec extends AnyFunSuite with BeforeAndAfterAll {
     val attached = e2.info("sl_docs")
       .filter(col("field") === "text").collect().head
       .getAs[String]("attached_indexes")
-    assert(attached.contains("posting"), s"got '$attached'")
+    assert(attached == "posting,suffix_posting,positional_posting",
+      s"got '$attached'")
     assert(e2.info("sl_emb").filter(col("field") === "vec").collect().head
       .getAs[String]("attached_indexes").contains("ann_graph"))
 
@@ -191,6 +195,16 @@ class EngineAdminSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(orig == restored && orig.nonEmpty)
     assert(e2.lastRouteEstimates.nonEmpty,
       "reloaded engine did not route via the re-attached posting")
+    // prefix (suffix posting) and phrase (positional posting) queries
+    // route on the restored engine too, with the source's results
+    Seq("@text:rarew*", "@text:\"rareword appears\"").foreach { pq =>
+      val a = e1.search("sl_docs", pq, SearchOptions(limit = (0, 50), noContent = true))
+        .collect().map(_.getString(0)).toSeq
+      val b = e2.search("sl_docs", pq, SearchOptions(limit = (0, 50), noContent = true))
+        .collect().map(_.getString(0)).toSeq
+      assert(a == b && b == Seq("99"), s"$pq: $a vs $b")
+      assert(e2.lastRouteEstimates.nonEmpty, s"reloaded engine did not route $pq")
+    }
 
     // graph-ANN query: the reloaded graph serves the SAME beam result
     // as the source engine's in-memory graph (match-all KNN → graph path)

@@ -4,11 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-import graft.engine.{SearchEngine, SearchOptions}
+import graft.engine.{PostingStats, SearchEngine, SearchOptions}
 import graft.model._
 import graft.query.FilterParser
 import graft.sources.Documents
-import graft.text.PostingIndex
+import graft.text.{PostingIndex, PostingKind}
 
 /**
  * The old-docs + new-postings transient mix (round-12 verdict item):
@@ -74,12 +74,14 @@ class EpochMixSpec extends AnyFunSuite with BeforeAndAfterAll {
     e.registerPosting("em_t", "body", p)
     e.registerPostingStats("em_t", "body", counts(p))
     val sfx = PostingIndex.buildSuffixes(docs, schema, "body")
-    e.registerSuffixPosting("em_t", "body", sfx)
-    e.registerTokenStats("em_t", "body",
-      counts(sfx.filter(org.apache.spark.sql.functions.col("full"))))
+    e.registerPosting("em_t", "body", sfx, PostingKind.Suffix)
+    e.registerPostingStats("em_t", "body", PostingStats.hotOnly(
+      counts(sfx.filter(org.apache.spark.sql.functions.col("full")))),
+        PostingKind.Suffix)
     val pos = PostingIndex.buildPositions(docs, schema, "body")
-    e.registerPositionalPosting("em_t", "body", pos)
-    e.registerPositionalStats("em_t", "body", counts(pos))
+    e.registerPosting("em_t", "body", pos, PostingKind.Positional)
+    e.registerPostingStats("em_t", "body", PostingStats.hotOnly(counts(pos)),
+        PostingKind.Positional)
     e.registerPosting("em_t", "cat", PostingIndex.buildTags(docs, schema, "cat"))
     e.registerPostingStats("em_t", "cat", Map("hot" -> 2L, "cold" -> 2L))
     docs

@@ -62,7 +62,7 @@ class JsonStreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val store = graft.text.PostingStore.init(spark,
       graft.text.PostingIndex.build(enriched, schema, "text"), storeDir)
     maintainer = new IndexMaintainer(engine, "js_inc", schema,
-      postingStores = Map("text" -> store),
+      stores = Map(("text", graft.text.PostingKind.Term) -> store),
       docsSource = Some(() => Ingest.readState(spark, statePath)),
       compactRowThreshold = 1000, // stay on the overlay path
       statsDir = Some(s"$tmp/stats")).register()

@@ -6,10 +6,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-import graft.engine.{SearchEngine, SearchOptions}
+import graft.engine.{PostingStats, SearchEngine, SearchOptions}
 import graft.model._
 import graft.sources.Documents
-import graft.text.PostingIndex
+import graft.text.{PostingIndex, PostingKind}
 
 /**
  * Every routed query class under concurrent re-registration. The
@@ -64,12 +64,14 @@ class MaintainStressSpec extends AnyFunSuite with BeforeAndAfterAll {
       e.registerPosting("ms_t", "body", p)
       e.registerPostingStats("ms_t", "body", counts(p))
       val sfx = PostingIndex.buildSuffixes(docs, schema, "body")
-      e.registerSuffixPosting("ms_t", "body", sfx)
-      e.registerTokenStats("ms_t", "body",
-        counts(sfx.filter(org.apache.spark.sql.functions.col("full"))))
+      e.registerPosting("ms_t", "body", sfx, PostingKind.Suffix)
+      e.registerPostingStats("ms_t", "body", PostingStats.hotOnly(
+        counts(sfx.filter(org.apache.spark.sql.functions.col("full")))),
+        PostingKind.Suffix)
       val pos = PostingIndex.buildPositions(docs, schema, "body")
-      e.registerPositionalPosting("ms_t", "body", pos)
-      e.registerPositionalStats("ms_t", "body", counts(pos))
+      e.registerPosting("ms_t", "body", pos, PostingKind.Positional)
+      e.registerPostingStats("ms_t", "body", PostingStats.hotOnly(counts(pos)),
+        PostingKind.Positional)
       e.registerPosting("ms_t", "cat", PostingIndex.buildTags(docs, schema, "cat"))
       // ANN on every OTHER cycle: readers cross both the graph-present
       // and graph-absent planner regimes, and the drop window between

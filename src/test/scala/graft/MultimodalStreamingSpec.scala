@@ -9,6 +9,7 @@ import org.scalatest.BeforeAndAfterAll
 import graft.model._
 import graft.pipeline.Multimodal
 import graft.streaming.{IndexMaintainer, Ingest}
+import graft.text.PostingKind
 
 class MultimodalStreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -380,7 +381,7 @@ class MultimodalStreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     engine.createIndex(schema, graft.sources.Documents.enrich(
       Ingest.readState(spark, statePath), schema))
     val maintainer = new IndexMaintainer(engine, "live2", schema,
-      postingStores = Map("body" -> store),
+      stores = Map(("body", PostingKind.Term) -> store),
       annIndexes = Map("emb" -> nsw),
       docsSource = Some(() => Ingest.readState(spark, statePath))).register()
 
@@ -441,7 +442,7 @@ class MultimodalStreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val engine = new graft.engine.SearchEngine
     engine.createIndex(schema, graft.sources.Documents.enrich(corpus(0), schema))
     val maintainer = new IndexMaintainer(engine, "churn", schema,
-      postingStores = Map("body" -> store),
+      stores = Map(("body", PostingKind.Term) -> store),
       compactRowThreshold = 60).register()
 
     // 8 rounds × full supersede of 10 docs: without compaction the
@@ -488,7 +489,7 @@ class MultimodalStreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     engine.createIndex(schema, graft.sources.Documents.enrich(corpus, schema))
     engine.postingRouteMaxSelectivity = 1.0
     val maintainer = new IndexMaintainer(engine, "sfx", schema,
-      suffixStores = Map("body" -> store),
+      stores = Map(("body", PostingKind.Suffix) -> store),
       docsSource = Some(() => corpus)).register()
 
     def hits(q: String): (Set[String], Boolean) = {
@@ -535,7 +536,7 @@ class MultimodalStreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val engine = new graft.engine.SearchEngine
     engine.createIndex(schema, graft.sources.Documents.enrich(corpus, schema))
     val maintainer = new IndexMaintainer(engine, "mstats", schema,
-      postingStores = Map("body" -> store),
+      stores = Map(("body", PostingKind.Term) -> store),
       docsSource = Some(() => corpus),
       compactRowThreshold = 1000).register()
     val opts = graft.engine.SearchOptions(noContent = true)
@@ -569,7 +570,7 @@ class MultimodalStreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     corpus = corpus.filter(!col("__key").isin((2 to 12).map(i => s"k$i"): _*))
       .unionByName((2 to 12).map(i => (s"k$i", s"tok$i common extra")).toDF("__key", "body"))
     val mt = new IndexMaintainer(engine, "mstats", schema,
-      postingStores = Map("body" -> store),
+      stores = Map(("body", PostingKind.Term) -> store),
       docsSource = Some(() => corpus),
       compactRowThreshold = 1) // any batch triggers compact
     mt.onBatch(burst)
@@ -676,7 +677,7 @@ class MultimodalStreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sp = spark; import sp.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-reopen").toString
     val schema = IndexSchema("surv", Seq(
-      FieldDef("body", TextField()),
+      FieldDef("body", TextField(withSuffixTrie = true)),
       FieldDef("emb", VectorField(dim = 4, metric = DistanceMetric.L2))))
     var corpus = Seq(
       ("k1", "quantum flux", Array(0f, 0f, 0f, 1f)),
@@ -723,8 +724,16 @@ class MultimodalStreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     def keys(q: String, opts: graft.engine.SearchOptions =
         graft.engine.SearchOptions(noContent = true)): Seq[String] =
       e2.search("surv", q, opts).collect().map(_.getAs[String]("__key")).toSeq
+    // every posting kind's store reopened and registered
+    assert(e2.info("surv").filter(col("field") === "body").collect().head
+      .getAs[String]("attached_indexes") ==
+      "posting,suffix_posting,positional_posting")
     assert(keys("@body:quantum").toSet == Set("k4")) // k1 deleted, k4 added
+    assert(e2.lastRouteEstimates.nonEmpty, "term did not route")
+    assert(keys("@body:quan*").toSet == Set("k4")) // suffix store
+    assert(e2.lastRouteEstimates.nonEmpty, "prefix did not route")
     assert(keys("@body:\"quantum gadget\"") == Seq("k4")) // positional store
+    assert(e2.lastRouteEstimates.nonEmpty, "phrase did not route")
     val knn = graft.engine.SearchOptions(limit = (0, 1),
       params = Map("q" -> graft.query.VectorParam(Array(0f, 0f, 0f, 1f))))
     assert(keys("*=>[KNN 1 @emb $q EF_RUNTIME 50]", knn) == Seq("k4"))

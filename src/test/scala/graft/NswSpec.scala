@@ -193,6 +193,9 @@ class NswSpec extends AnyFunSuite with BeforeAndAfterAll {
         override def onFailure(funcName: String,
             qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
       }
+      // the warm-up's collect event can still be queued on the async
+      // bus: drain it first, or the new listener counts it too
+      org.apache.spark.GraftTestBus.drain(spark.sparkContext)
       spark.listenerManager.register(listener)
       try {
         // eager segment of search(): qualified-keys materialization (1
