@@ -23,13 +23,18 @@ import scala.collection.concurrent.TrieMap
  * lookups are neither hits nor misses. `onDrop` runs exactly once for
  * every value the cache lets go — evicted, invalidated, rejected at
  * admission, or the loser of an insert race.
+ *
+ * Every hit, miss and LRU eviction also counts into `counters`, the
+ * process-wide [[Metrics.CacheCounters]] the metrics snapshot reports
+ * (the per-instance `hits`/`misses` count this cache alone).
  */
 final class EpochCache[V](
     var maxEntries: Int,
     epochOf: String => Long,
     settings: () => String,
     admit: V => Boolean = (_: V) => true,
-    onDrop: V => Unit = (_: V) => ()) {
+    onDrop: V => Unit = (_: V) => (),
+    counters: Metrics.CacheCounters = new Metrics.CacheCounters("unlisted")) {
   import EpochCache.Key
 
   private final class Entry(val index: String, val value: V, @volatile var used: Long)
@@ -62,9 +67,11 @@ final class EpochCache[V](
       case Some(e) =>
         e.used = clock.incrementAndGet()
         hits.incrementAndGet()
+        counters.hit.incrementAndGet()
         Some(e.value)
       case None =>
         misses.incrementAndGet()
+        counters.miss.incrementAndGet()
         None
     }
 
@@ -81,7 +88,8 @@ final class EpochCache[V](
           if (epochOf(k.index) != k.epoch) remove(k.text, e)
           while (entries.size > maxEntries)
             entries.minByOption(_._2.used) match {
-              case Some((oldKey, old)) => remove(oldKey, old)
+              case Some((oldKey, old)) =>
+                if (remove(oldKey, old)) counters.eviction.incrementAndGet()
               case None => return
             }
       }
@@ -92,8 +100,8 @@ final class EpochCache[V](
     entries.foreach { case (k, e) => if (e.index == index) remove(k, e) }
 
   // conditional remove: whoever removes an entry runs its onDrop, once
-  private def remove(k: String, e: Entry): Unit =
-    if (entries.remove(k, e)) onDrop(e.value)
+  private def remove(k: String, e: Entry): Boolean =
+    entries.remove(k, e) && { onDrop(e.value); true }
 }
 
 object EpochCache {

@@ -42,6 +42,29 @@ object Metrics {
   val postingRouted = new AtomicLong
   val postingGuardRejected = new AtomicLong
   val postingScan = new AtomicLong
+  /** Which base a non-vector content miss materialized: a
+    * driver-resident base of at most `baseCacheMaxRows` rows (one
+    * bounded collect), or the persisted cap+1-row base. */
+  val replyLocalBase = new AtomicLong
+  val replyPersistedBase = new AtomicLong
+
+  /** Hit, miss and LRU-eviction counters of one kind of engine reply
+    * cache ([[EpochCache]]), summed over every engine in the process;
+    * reported as `<name>_{hit,miss,eviction}_cnt`. */
+  final class CacheCounters(val name: String) {
+    val hit = new AtomicLong
+    val miss = new AtomicLong
+    val eviction = new AtomicLong
+    def snapshot(): Seq[(String, Long)] = Seq(
+      s"${name}_hit_cnt" -> hit.get(),
+      s"${name}_miss_cnt" -> miss.get(),
+      s"${name}_eviction_cnt" -> eviction.get())
+    def reset(): Unit = Seq(hit, miss, eviction).foreach(_.set(0))
+  }
+  val replyCache = new CacheCounters("reply_cache")
+  val baseCache = new CacheCounters("base_cache")
+  val aggReplyCache = new CacheCounters("agg_reply_cache")
+  private val caches = Seq(replyCache, baseCache, aggReplyCache)
 
   /** log₂ latency histogram: bucket i counts samples in
     * [2^i, 2^(i+1)) microseconds; last bucket is the overflow — the
@@ -135,8 +158,10 @@ object Metrics {
       "query_result_record_dropped_cnt" -> queryResultRecordDropped.get(),
       "query_posting_routed_cnt" -> postingRouted.get(),
       "query_posting_guard_rejected_cnt" -> postingGuardRejected.get(),
-      "query_posting_scan_cnt" -> postingScan.get())
-    counters ++
+      "query_posting_scan_cnt" -> postingScan.get(),
+      "query_reply_local_base_cnt" -> replyLocalBase.get(),
+      "query_reply_persisted_base_cnt" -> replyPersistedBase.get())
+    counters ++ caches.flatMap(_.snapshot()) ++
       compatLegacy.toSeq.sortBy(_._1).map { case (l, c) =>
         s"compatibility-$l" -> c.get() } ++
       latency.snapshot() ++ hnswSearchLatency.snapshot() ++
@@ -147,8 +172,9 @@ object Metrics {
   def reset(): Unit = {
     Seq(querySuccess, queryFailed, queryVector, queryNonVector, queryText,
       queryHybrid, knnPrefilter, knnInline, nonVectorFetchLimited,
-      queryResultRecordDropped, postingRouted, postingGuardRejected, postingScan)
-      .foreach(_.set(0))
+      queryResultRecordDropped, postingRouted, postingGuardRejected, postingScan,
+      replyLocalBase, replyPersistedBase).foreach(_.set(0))
+    caches.foreach(_.reset())
     compatLegacy.clear()
     Seq(latency, hnswSearchLatency, flatSearchLatency, nonVectorLatency,
       aggregateLatency).foreach(_.reset())

@@ -262,7 +262,8 @@ class SearchEngine {
   /** Complete non-vector FT.SEARCH replies, with the per-call metric
     * effects a hit replays. */
   val replyCache = new EpochCache[SearchEngine.CachedReply](256, epochOf,
-    () => cacheSettings, _.reply.rows.length <= replyCacheMaxRows)
+    () => cacheSettings, _.reply.rows.length <= replyCacheMaxRows,
+    counters = Metrics.replyCache)
   /** Replies with more page rows than this are never cached (memory
     * bound per entry; LIMIT-sized pages are far below it). */
   var replyCacheMaxRows: Int = 10000
@@ -290,7 +291,7 @@ class SearchEngine {
     * a concurrent request reads lets AQE freeze a zero-row stage into
     * that request's reply (see [[cachePrivate]]). */
   val baseCache = new EpochCache[SearchEngine.CachedBase](32, epochOf,
-    () => cacheSettings, onDrop = _.kill())
+    () => cacheSettings, onDrop = _.kill(), counters = Metrics.baseCache)
   /** Row bound for materializing a FULL base as a LocalRelation; bigger
     * bases (up to the fetch cap) stay persisted. */
   var baseCacheMaxRows: Int = 4096
@@ -306,7 +307,8 @@ class SearchEngine {
     * never consults ANN state). Errors are never cached (they throw
     * past the insert). */
   val aggReplyCache = new EpochCache[Array[Byte]](64, epochOf,
-    () => cacheSettings, _.length <= aggReplyCacheMaxBytes)
+    () => cacheSettings, _.length <= aggReplyCacheMaxBytes,
+    counters = Metrics.aggReplyCache)
   /** Wire replies longer than this are never cached. */
   var aggReplyCacheMaxBytes: Int = 1 << 20
 
@@ -660,6 +662,8 @@ class SearchEngine {
     // scan (or exact KNN), which is correct against whichever docs the
     // reader holds.
     dropDerived(schema.name)
+    // pages over driver-resident bases plan as LocalTableScans
+    LocalPageFold.install(docs.sparkSession)
     catalog.synchronized { catalog(schema.name) = (schema, stored) }
     // catalog swap, THEN the epoch bump and cache drops (see newEpoch's
     // ordering contract with the cache lookup paths)
@@ -1084,7 +1088,9 @@ class SearchEngine {
           if (es.forall(_.isDefined)) Some(es.flatten.sum) else None
         case _ => None
       }
-      val maxKeys = math.max(1L,
+      // lazy: the corpus count runs only when a conjunct has both a
+      // posting route and an estimate to guard
+      lazy val maxKeys = math.max(1L,
         (postingRouteMaxSelectivity * docCount(schema.name)).toLong)
       // Min-child ordering (reference X2: the AND picks its SMALLEST
       // fetcher to drive retrieval, search.cc EvaluateFilterAsPrimary):
@@ -1157,18 +1163,36 @@ class SearchEngine {
     case _ => None
   }
 
-  /** KNN + SORTBY/LIMIT/RETURN back half over an already-filtered plan.
-    * `ep` gates the ANN graph exactly like filterStage gates postings:
-    * a graph re-registered from a newer corpus than the docs this
-    * request captured returns neighbors whose keys/vectors disagree
-    * with the snapshot — mismatch falls back to exact KNN. */
+  /** The back half of FT.SEARCH over an already-filtered plan: the
+    * KNN top-k ([[knnStage]]), then the page ([[pageStage]]). [[search]]
+    * returns this plan; [[knnReply]] runs the two halves apart so the
+    * page reads the collected top-k. */
   private[graft] def finishSearch(indexName: String, schema: IndexSchema,
                                   filtered: DataFrame, parsed: ParsedQuery,
-                                  opts: SearchOptions, ep: Long): DataFrame = {
+                                  opts: SearchOptions, ep: Long): DataFrame =
+    pageStage(schema, knnStage(indexName, schema, filtered, parsed, ep), parsed, opts)
+
+  /** The score pseudo-column a KNN query adds (its AS name, else the
+    * field's default), if any. */
+  private def scoreNameOf(schema: IndexSchema, parsed: ParsedQuery): Option[String] =
+    parsed.knn.map(k => k.asName.getOrElse(schema.scoreField(k.field)))
+
+  /** A driver-resident DataFrame of collected rows: a `LocalRelation`,
+    * over which [[LocalPageFold]] plans a page as a LocalTableScan. */
+  private def localOf(like: DataFrame, rows: Array[org.apache.spark.sql.Row]): DataFrame =
+    like.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), like.schema)
+
+  /** The KNN half: the hybrid planner's exact or ANN top-k (at most k
+    * rows, ordered by score then key) with the score column added; the
+    * filtered plan unchanged when the query has no KNN clause. `ep`
+    * gates the ANN graph exactly like filterStage gates postings: a
+    * graph re-registered from a newer corpus than the docs this request
+    * captured returns neighbors whose keys/vectors disagree with the
+    * snapshot — mismatch falls back to exact KNN. */
+  private def knnStage(indexName: String, schema: IndexSchema,
+                       filtered: DataFrame, parsed: ParsedQuery, ep: Long): DataFrame = {
     var df = filtered
     val keyCol = col(schema.keyColumn)
-    var scoreName: Option[String] = None
-
     parsed.knn match {
       case Some(knn) =>
         val fd = schema.fieldOrFail(knn.field)
@@ -1177,8 +1201,7 @@ class SearchEngine {
           case _ => throw new IllegalArgumentException(s"${knn.field} is not VECTOR")
         }
         checkBlobSize(knn, vf)
-        val name = knn.asName.getOrElse(schema.scoreField(knn.field))
-        scoreName = Some(name)
+        val name = scoreNameOf(schema, parsed).get
         val normalized = vf.metric == DistanceMetric.Cosine && vf.normalizeAtIngest
         val qvec =
           if (normalized) normalizeQuery(knn.queryVector, vf.metric) else knn.queryVector
@@ -1203,9 +1226,8 @@ class SearchEngine {
           .collect { case (idx, regEp) if regEp == ep => idx }
         val qualifiedKeys: Option[(DataFrame, Long)] =
           if (ann.isDefined && !parsed.isMatchAll) {
-            // cache-private for the same reason as knnReply's base: the
-            // unpersist after the Bloom build must only ever reach THIS
-            // request's materialization
+            // cache-private: the unpersist after the Bloom build must
+            // only ever reach THIS request's materialization
             val keys = cachePrivate(df.select(keyCol))
               .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
             val cnt =
@@ -1264,18 +1286,18 @@ class SearchEngine {
           val hits = ann.get.searchFiltered(qvec, k = overFetch, ef, keyFilter)
             .withColumnRenamed("distance", name)
             .withColumnRenamed("__key", "__ann_key")
-          // ≤ k rows after the top-k merge: eager localCheckpoint keeps
-          // the completeness probe below AND the caller's downstream use
-          // from re-running the beam search + join.
-          val annResult = hits.join(df, hits("__ann_key") === keyCol)
+          // ≤ k rows after the top-k merge: one collect into a
+          // LocalRelation serves the completeness probe below AND the
+          // caller's downstream use without re-running the beam + join.
+          val annPlan = hits.join(df, hits("__ann_key") === keyCol)
             .drop("__ann_key")
             .orderBy(col(name).asc, keyCol.asc)
             .limit(knn.k)
-            .localCheckpoint(true)
+          val annTop = annPlan.collect()
           // Completeness fallback: if fewer than k qualified neighbors
           // survived (tiny qualified set or ef too small), the exact
           // pre-filter path answers instead.
-          df = if (parsed.isMatchAll || annResult.count() >= knn.k) annResult
+          df = if (parsed.isMatchAll || annTop.length >= knn.k) localOf(annPlan, annTop)
                else exactKnn(df)
         } else {
           qualifiedKeys.foreach(_._1.unpersist(blocking = false))
@@ -1287,17 +1309,27 @@ class SearchEngine {
         }
       case None =>
     }
+    df
+  }
 
+  /** The page half: SORTBY, LIMIT, RETURN/NOCONTENT and WITHSORTKEYS
+    * over the ranked rows. Over a driver-resident relation the whole
+    * page folds into a LocalRelation ([[LocalPageFold]]) and runs no
+    * Spark job. */
+  private def pageStage(schema: IndexSchema, ranked: DataFrame,
+                        parsed: ParsedQuery, opts: SearchOptions): DataFrame = {
+    val keyCol = col(schema.keyColumn)
+    val scoreName = scoreNameOf(schema, parsed)
     // SORTBY: missing-value docs go last (reference search.cc SORTBY;
     // SURVEY §2.7 R2); key tiebreak keeps results deterministic.
     val sorted = opts.sortBy match {
       case Some((field, asc)) =>
         val c = col(schema.fieldOrFail(field).alias)
-        df.orderBy(if (asc) c.asc_nulls_last else c.desc_nulls_last, keyCol.asc)
+        ranked.orderBy(if (asc) c.asc_nulls_last else c.desc_nulls_last, keyCol.asc)
       case None if parsed.knn.isDefined =>
-        df.orderBy(col(scoreName.get).asc, keyCol.asc) // R4 default ordering
+        ranked.orderBy(col(scoreName.get).asc, keyCol.asc) // R4 default ordering
       case None =>
-        df.orderBy(keyCol.asc)
+        ranked.orderBy(keyCol.asc)
     }
 
     val (offset, count) = opts.limit
@@ -1481,15 +1513,18 @@ class SearchEngine {
 
   /** Non-vector total+page compute behind the reply cache. Serves from
     * the filtered-base cache when the base-affecting request subset
-    * matches (page/SORTBY/RETURN/NOCONTENT variants of a seen filter);
-    * otherwise materializes the base once — via a SINGLE collect of the
-    * narrow key/sort projection for NOCONTENT requests (the reference's
-    * single-pass total+page, search.cc:780-814, needs no second job
-    * when no content is fetched), or a persisted cap+1-row relation
-    * whose count fills the cache and whose page reads it (one scan of
-    * the source; the +1 detects truncation — the reference's fetch cap,
-    * search.cc:623). Either base then populates the base cache for the
-    * next variant of the same filter. */
+    * matches (page/SORTBY/RETURN/NOCONTENT variants of a seen filter).
+    * Otherwise it materializes the base with ONE bounded collect: the
+    * narrow key/sort projection up to cap+1 rows for NOCONTENT requests
+    * (the reference's single-pass total+page, search.cc:780-814), the
+    * reply columns up to min(cap, [[baseCacheMaxRows]])+1 rows for
+    * content requests. The collected rows are a driver-resident base
+    * whose length is the exact count (the +1 detects truncation — the
+    * reference's fetch cap, search.cc:623); its page folds into a
+    * LocalTableScan ([[LocalPageFold]]) and runs no job. Only a content
+    * base bigger than that bound takes the persisted cap+1-row path.
+    * Either base then populates the base cache for the next variant of
+    * the same filter. */
   private def nonVectorReply(indexName: String, ep: Long, schema: IndexSchema,
                              docs: DataFrame, parsed: ParsedQuery, query: String,
                              opts: SearchOptions): (SearchEngine.SearchReply, Boolean, Long) = {
@@ -1499,7 +1534,7 @@ class SearchEngine {
       if (limited) Metrics.nonVectorFetchLimited.incrementAndGet()
       val total = math.min(n, cap.toLong)
       // the page draws from the SAME truncated set the total counted
-      val page = finishSearch(indexName, schema, base.limit(cap), parsed, opts, ep)
+      val page = pageStage(schema, base.limit(cap), parsed, opts)
       val collected = page.collect()
       // Page invariant (r13 soak finding: a page collected empty while
       // the total counted; retry healed): a first page with room can
@@ -1546,36 +1581,20 @@ class SearchEngine {
             val narrow = filterStage(schema, docs, parsed, opts, ep)
               .select(cols.map(col): _*).limit(cap + 1)
             val collected = narrow.collect()
-            // the page re-runs finishSearch over a LocalRelation of the
+            // the page runs pageStage over a LocalRelation of the
             // collected rows, keeping sort/offset/sortkey semantics on
-            // the one code path at LocalTableScan cost
-            val local = docs.sparkSession.createDataFrame(
-              java.util.Arrays.asList(collected: _*), narrow.schema)
+            // the one code path at no Spark job
+            val local = localOf(narrow, collected)
             baseCache.put(lookupKeys.head,
               SearchEngine.CachedBase(local, collected.length.toLong))
             finishFrom(local, collected.length.toLong)
           case None =>
-            // ONE cache-PRIVATE persisted materialization serves total
-            // and page — the nonce keeps every other request's plans on
-            // separate CacheManager entries, so the ONLY unpersist that
-            // can reach this relation is its own lifecycle (the r13
-            // soak's AQE empty-propagation race is impossible by
-            // construction). Bases within baseCacheMaxRows are then
-            // collected off the cached relation into a driver-resident
-            // LocalRelation (no lifecycle at all) and the transient
-            // persist is dropped; bigger bases stay persisted and enter
-            // the cache under the reader-refcounted CachedBase
-            // lifecycle, so a paging client pays the corpus scan once
-            // and page latency is flat in corpus size (STATUS.md "Round
-            // 11 — serving at scale, measured"). Failures (a SORTBY on
-            // an unknown field raises in finishSearch) always unpersist.
-            val bound = math.min(cap, baseCacheMaxRows)
             // The base materializes REPLY columns only: the key, the
             // source attributes, and the preserved raws (content
             // fallback). The enrichment projections (token arrays,
             // term sets, tag arrays) exist for FILTERING, which
             // filterStage already applied — carrying them through the
-            // persist would re-tokenize and store every matched
+            // materialization would re-tokenize and ship every matched
             // document's text (measured 4.5× the raw scan floor at the
             // 100× corpus; STATUS.md "Round 13 — big-base serving
             // restored + cold first-page adjudicated"). Dropping them
@@ -1588,26 +1607,42 @@ class SearchEngine {
                   c.endsWith("__raw"))
               enriched.select(keep.map(col).toIndexedSeq: _*)
             }
-            val solo = cachePrivate(replyCols)
-              .limit(cap + 1)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              val n = solo.count()
-              if (n <= bound) {
-                val head = solo.collect() // cache-served, no second scan
-                val local = docs.sparkSession.createDataFrame(
-                  java.util.Arrays.asList(head: _*), solo.schema)
-                solo.unpersist(blocking = false)
-                baseCache.put(fullKey, SearchEngine.CachedBase(local, n))
-                finishFrom(local, n)
-              } else {
+            // ONE bounded collect decides the branch: at most `bound`
+            // rows back is the whole base, driver-resident with no
+            // lifecycle at all, and its row count is the exact total.
+            val bound = math.min(cap, baseCacheMaxRows)
+            val head = replyCols.limit(bound + 1).collect()
+            if (head.length <= bound) {
+              Metrics.replyLocalBase.incrementAndGet()
+              val local = localOf(replyCols, head)
+              baseCache.put(fullKey, SearchEngine.CachedBase(local, head.length.toLong))
+              finishFrom(local, head.length.toLong)
+            } else {
+              // A bigger base: ONE cache-PRIVATE persisted cap+1-row
+              // materialization serves total and page — the nonce keeps
+              // every other request's plans on separate CacheManager
+              // entries, so the ONLY unpersist that can reach this
+              // relation is its own lifecycle (the r13 soak's AQE
+              // empty-propagation race is impossible by construction).
+              // It enters the cache under the reader-refcounted
+              // CachedBase lifecycle, so a paging client pays the corpus
+              // scan once and page latency is flat in corpus size
+              // (STATUS.md "Round 11 — serving at scale, measured").
+              // Failures (a SORTBY on an unknown field raises in
+              // pageStage) always unpersist.
+              Metrics.replyPersistedBase.incrementAndGet()
+              val solo = cachePrivate(replyCols)
+                .limit(cap + 1)
+                .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+              try {
+                val n = solo.count()
                 val out = finishFrom(solo, n)
                 // a base the cache does not keep is killed: unpersisted
                 baseCache.put(fullKey, SearchEngine.CachedBase(solo, n, local = false))
                 out
+              } catch { case e: Throwable =>
+                solo.unpersist(blocking = false); throw e
               }
-            } catch { case e: Throwable =>
-              solo.unpersist(blocking = false); throw e
             }
         }
     }
@@ -1625,7 +1660,9 @@ class SearchEngine {
     * per-request literal keeps the analyzed plan distinct — same
     * semantics, same schema, folded away by the optimizer — so the
     * only actor that can unpersist a serving read's plan is the
-    * request that owns it, strictly after its own reads. */
+    * request that owns it, strictly after its own reads. The two
+    * serving persists left are the big-base path of [[nonVectorReply]]
+    * and the hybrid planner's qualified-key set in [[knnStage]]. */
   private def cachePrivate(df: DataFrame): DataFrame = {
     val u = lit(java.util.UUID.randomUUID().toString)
     df.filter(u === u)
@@ -1633,28 +1670,28 @@ class SearchEngine {
 
   /** Vector/hybrid total+page compute (never cached — ANN registration
     * and the hybrid planner's mutable threshold are not in any key, and
-    * planner counters bump per call). */
+    * planner counters bump per call). The KNN half is collected ONCE
+    * (at most k rows, one Spark action on the exact path); `total` is
+    * its row count, which is min(non-null vectors in the filtered set,
+    * k), and the page runs over a LocalRelation of those rows (no job).
+    * Nothing is persisted. One exception keeps the total exact: an ANN
+    * beam over a match-all query can reach fewer than k vectors, so a
+    * short ANN top-k re-counts the non-null vectors (k-bounded). */
   private def knnReply(indexName: String, ep: Long, schema: IndexSchema, docs: DataFrame,
                        parsed: ParsedQuery, opts: SearchOptions): (SearchEngine.SearchReply, Boolean, Long) = {
     val k = parsed.knn.get
-    // cache-private: concurrent identical KNN requests must not share
-    // a CacheManager entry — this request's finally-unpersist would
-    // otherwise destroy the other's in-flight page read (r13 soak race)
-    val base = cachePrivate(filterStage(schema, docs, parsed, opts, ep))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // bounded probe: k+1 rows decide min(count, k) — never a full
-      // count of the filtered cache
-      val total = math.min(
-        base.filter(col(schema.fieldOrFail(k.field).alias).isNotNull)
-          .limit(k.k + 1).count(),
-        k.k.toLong)
-      val page = finishSearch(indexName, schema, base, parsed, opts, ep)
-      val (rows, dropped) =
-        applyContentLimits(page.collect(), page.schema, schema, parsed, opts)
-      if (dropped > 0) Metrics.queryResultRecordDropped.addAndGet(dropped)
-      (SearchEngine.SearchReply(total, rows), false, dropped)
-    } finally { base.unpersist(blocking = false); () }
+    val filtered = filterStage(schema, docs, parsed, opts, ep)
+    val ranked = knnStage(indexName, schema, filtered, parsed, ep)
+    val top = ranked.collect()
+    val total =
+      if (top.length < k.k && parsed.isMatchAll && Metrics.lastKnnBranchInline.get())
+        filtered.filter(col(schema.fieldOrFail(k.field).alias).isNotNull).limit(k.k).count()
+      else top.length.toLong
+    val page = pageStage(schema, localOf(ranked, top), parsed, opts)
+    val (rows, dropped) =
+      applyContentLimits(page.collect(), page.schema, schema, parsed, opts)
+    if (dropped > 0) Metrics.queryResultRecordDropped.addAndGet(dropped)
+    (SearchEngine.SearchReply(total, rows), false, dropped)
   }
 
   /** Reply-record content limits (reference ProcessNeighborsForReply,
@@ -1671,8 +1708,7 @@ class SearchEngine {
                                  pageSchema: org.apache.spark.sql.types.StructType,
                                  idxSchema: IndexSchema, parsed: ParsedQuery,
                                  opts: SearchOptions): (Array[org.apache.spark.sql.Row], Long) = {
-    val scoreNames = parsed.knn
-      .map(k => k.asName.getOrElse(idxSchema.scoreField(k.field))).toSet
+    val scoreNames = scoreNameOf(idxSchema, parsed).toSet
     // content = returned attributes; the key, WITHSORTKEYS pseudo-field
     // and KNN distance ride the Neighbor itself in the reference reply
     val contentIdx = pageSchema.fieldNames.zipWithIndex.filterNot { case (n, _) =>

@@ -14,7 +14,7 @@ import graft.sources.Documents
  * 1. The full-base path's unpersist-on-failure guarantee
  *    (SearchEngine.nonVectorReply): a request whose base persists and
  *    then fails AFTER the count — e.g. SORTBY on an unknown field,
- *    which raises in finishSearch via fieldOrFail — must not leak the
+ *    which raises in the page stage via fieldOrFail — must not leak the
  *    persisted cap+1 relation. The RESP handler keeps serving after
  *    such an error (reference: an FT.SEARCH arity/field error is a
  *    reply, not a connection teardown), so without the guard repeated
@@ -54,9 +54,10 @@ class ReplyResourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("a failing SORTBY request leaves block-manager storage flat") {
     val e = freshEngine()
-    // content request (narrow NOCONTENT projection would dodge the
-    // persist), unknown SORTBY field → fieldOrFail throws in
-    // finishSearch AFTER base.persist + count have run
+    // content request, unknown SORTBY field → fieldOrFail throws in
+    // the page stage AFTER the base materialized (a base within
+    // baseCacheMaxRows is a bounded collect and persists nothing; the
+    // big-base test below covers the persisted path)
     val bad = SearchOptions(sortBy = Some(("no_such_field", true)))
     val baseline = spark.sparkContext.getPersistentRDDs.size
     (1 to 5).foreach { _ =>
