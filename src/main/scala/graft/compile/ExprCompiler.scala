@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
 import graft.query.{Expr, ExprParseException}
-import graft.functions.{contains_count, parsetime, timefmt}
+import graft.functions.{contains_count, parsetime, ref_lit, timefmt}
 
 /**
  * Static type tag for a compiled expression — the Spark-side stand-in
@@ -110,7 +110,8 @@ final class ExprCompiler(
   // ------------------------------------------------------------------ //
 
   def compile(e: Expr): TypedCol = e match {
-    case NumLit(v) => TypedCol(lit(v), Num)
+    // by reference: a new number reuses the compiled class (RefLiteral)
+    case NumLit(v) => TypedCol(ref_lit(v), Num)
     case StrLit(v) => TypedCol(lit(v), Str)
     case ParamRef(n) => TypedCol(
       lit(params.getOrElse(n, throw new ExprParseException(s"Unknown parameter $$$n"))), Str)

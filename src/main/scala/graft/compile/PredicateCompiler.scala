@@ -3,6 +3,7 @@ package graft.compile
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.functions.ref_lit
 import graft.model._
 import graft.query._
 import graft.text.Analyzer
@@ -24,6 +25,15 @@ import graft.text.Analyzer
  * PushedFilters and Catalyst orders them by selectivity, which
  * subsumes the reference's min-cardinality index selection
  * (src/query/search.cc:336-347, SURVEY §2.3 X2).
+ *
+ * Range bounds are [[graft.functions.RefLiteral]]s: still `Literal`s to
+ * every optimizer rule, to the Parquet filter translation (the bounds
+ * stay in PushedFilters) and to the in-memory scan's batch-stats filter,
+ * but generated code reads them by reference, so a range with new bounds
+ * reuses the classes compiled for the first range of its shape instead
+ * of compiling them again (the codegen cache is keyed by source). Over a
+ * column cast from INT, Spark's `UnwrapCastInBinaryComparison` replaces
+ * the bound with a plain int literal, which is inlined again.
  */
 class PredicateCompiler(schema: IndexSchema, analyzer: Analyzer.Config = Analyzer.Default) {
 
@@ -42,10 +52,10 @@ class PredicateCompiler(schema: IndexSchema, analyzer: Analyzer.Config = Analyze
       // a bare lit(true) would also admit missing/invalid-data docs
       val lo =
         if (min == Double.NegativeInfinity) c.isNotNull
-        else if (minIncl) c >= min else c > min
+        else if (minIncl) c >= ref_lit(min) else c > ref_lit(min)
       val hi =
         if (max == Double.PositiveInfinity) c.isNotNull
-        else if (maxIncl) c <= max else c < max
+        else if (maxIncl) c <= ref_lit(max) else c < ref_lit(max)
       lo && hi
 
     case TagMatch(field, patterns) =>

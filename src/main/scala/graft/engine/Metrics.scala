@@ -1,6 +1,9 @@
 package graft.engine
 
-import java.util.concurrent.atomic.AtomicLong
+import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /**
  * Engine observability — the query-path slice of the reference's
@@ -65,6 +68,23 @@ object Metrics {
   val baseCache = new CacheCounters("base_cache")
   val aggReplyCache = new CacheCounters("agg_reply_cache")
   private val caches = Seq(replyCache, baseCache, aggReplyCache)
+
+  /** Janino compiles of generated classes and their summed time, read
+    * from Spark's process-wide codegen counters (every session in the
+    * JVM, driver and local executor threads alike); [[reset]] takes a
+    * baseline rather than clearing them. A cache hit in Spark's
+    * `CodeGenerator` is not a compile. */
+  private object Codegen {
+    private val base = new AtomicReference((0L, 0L))
+    private def now: (Long, Long) =
+      (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+    def snapshot(): Seq[(String, Long)] = {
+      val ((cnt, ns), (cnt0, ns0)) = (now, base.get())
+      Seq("codegen_compile_cnt" -> (cnt - cnt0),
+        "codegen_compile_ms" -> (ns - ns0) / 1000000L)
+    }
+    def reset(): Unit = base.set(now)
+  }
 
   /** log₂ latency histogram: bucket i counts samples in
     * [2^i, 2^(i+1)) microseconds; last bucket is the overflow — the
@@ -161,7 +181,7 @@ object Metrics {
       "query_posting_scan_cnt" -> postingScan.get(),
       "query_reply_local_base_cnt" -> replyLocalBase.get(),
       "query_reply_persisted_base_cnt" -> replyPersistedBase.get())
-    counters ++ caches.flatMap(_.snapshot()) ++
+    counters ++ caches.flatMap(_.snapshot()) ++ Codegen.snapshot() ++
       compatLegacy.toSeq.sortBy(_._1).map { case (l, c) =>
         s"compatibility-$l" -> c.get() } ++
       latency.snapshot() ++ hnswSearchLatency.snapshot() ++
@@ -175,6 +195,7 @@ object Metrics {
       queryResultRecordDropped, postingRouted, postingGuardRejected, postingScan,
       replyLocalBase, replyPersistedBase).foreach(_.set(0))
     caches.foreach(_.reset())
+    Codegen.reset()
     compatLegacy.clear()
     Seq(latency, hnswSearchLatency, flatSearchLatency, nonVectorLatency,
       aggregateLatency).foreach(_.reset())

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, JavaCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -1992,4 +1992,43 @@ case class EvalOnce(child: Expression) extends UnaryExpression {
     ev.copy(code = c.code, isNull = c.isNull, value = c.value)
   }
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
+}
+
+/**
+ * A number a request supplies (a range bound, an expression literal),
+ * read by generated code through the `references` array instead of
+ * inlined into the Java source — the way Spark's own `Literal` already
+ * emits strings and arrays.
+ *
+ * Everything that matches a `Literal` still matches it: it is foldable,
+ * it evaluates to its value, it equals a plain `Literal` of the same
+ * value and type, and optimizer rules, Parquet filter translation
+ * (`PushedFilters`) and the in-memory scan's batch-stats filter treat it
+ * as one, so plans and their text keep their shape. Only the generated
+ * source stops depending on the value. That matters because Spark's
+ * `CodeGenerator` cache is keyed by (context class loader, source): an
+ * inlined bound made every new range compile its whole-stage class on
+ * the driver, again on the executor thread (another class loader), and
+ * the cached relation's stats predicate once more. A rule that rewrites
+ * the literal (constant folding, cast unwrapping) builds a plain
+ * `Literal`, which only gives the saving up.
+ *
+ * Double, Long and Int values only (the companion's constructors).
+ */
+class RefLiteral private (v: Any, dt: DataType) extends Literal(v, dt) {
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val (boxed, unbox) = dataType match {
+      case DoubleType => ("java.lang.Double", "doubleValue")
+      case LongType => ("java.lang.Long", "longValue")
+      case _ => ("java.lang.Integer", "intValue")
+    }
+    val ref = ctx.addReferenceObj("literal", value, boxed)
+    ExprCode.forNonNullValue(JavaCode.global(s"$ref.$unbox()", dataType))
+  }
+}
+
+object RefLiteral {
+  def apply(v: Double): Literal = new RefLiteral(v, DoubleType)
+  def apply(v: Long): Literal = new RefLiteral(v, LongType)
+  def apply(v: Int): Literal = new RefLiteral(v, IntegerType)
 }

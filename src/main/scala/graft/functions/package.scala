@@ -131,6 +131,10 @@ package object functions {
   /** Raw Gopher-rule counts in one pass (struct). */
   def gopher_counts(text: Column): Column =
     expr2col(GopherCounts(col2expr(text)))
+  /** A request-supplied number as a literal whose generated code reads
+    * it by reference, so a new value reuses the compiled class (see
+    * [[RefLiteral]]). */
+  def ref_lit(v: Double): Column = expr2col(RefLiteral(v))
   /** Compute an expensive (struct) expression ONCE per row: a
     * deterministic pass-through that the optimizer must not duplicate
     * per referencing predicate nor push filters through (see

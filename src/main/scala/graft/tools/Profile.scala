@@ -7,13 +7,15 @@ import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.Bench
+import graft.engine.Metrics
 
 /** Where a gate's time goes, under the bench's own session and rep
   * protocol (`Bench.session`, `Bench.measure`): per gate, the median of
   * `SPARK_GRAFT_BENCH_REPS` timed reps after an untimed warm-up, then one
   * more rep profiled by a listener — jobs, stages, tasks, the stage-ms
-  * sum and the costliest stages with their shuffle and spill (the Spark
-  * UI's view; the UI is off in the bench session).
+  * sum, the Janino compiles it paid (count and ms) and the costliest
+  * stages with their shuffle and spill (the Spark UI's view; the UI is
+  * off in the bench session).
   *
   *  - `--plan` also prints the formatted physical plan and the optimizer's
   *    size estimate of the gate's result (the input of
@@ -48,6 +50,13 @@ object Profile {
     }
   }
 
+  /** Janino compiles so far and their summed ms (driver and local
+    * executor threads: the whole JVM). */
+  private def compiles(): (Long, Long) = {
+    val m = Metrics.snapshot().toMap
+    (m("codegen_compile_cnt"), m("codegen_compile_ms"))
+  }
+
   def main(args: Array[String]): Unit = {
     val (flags, gates) = args.toSeq.partition(_.startsWith("--"))
     val unknown = flags.filterNot(Set("--plan", "--rows"))
@@ -80,12 +89,15 @@ object Profile {
           r.err.fold("")(e => s" error=$e") + " =====")
         Bridge.drainListeners(spark.sparkContext)
         log.clear()
+        val (cnt0, ms0) = compiles()
         val (sec, _, _, err) = Bench.timeOnce(spark, sfDir, fn)
         Bridge.drainListeners(spark.sparkContext)
+        val (cnt, ms) = compiles()
         log.synchronized {
           println(f"  profiled rep=$sec%.3f s jobs=${log.jobs} stages=${log.stages.size} " +
             s"tasks=${log.stages.map(_.tasks).sum} " +
-            s"stage-ms-sum=${log.stages.map(_.ms).sum} (overlap possible)" +
+            s"stage-ms-sum=${log.stages.map(_.ms).sum} (overlap possible) " +
+            s"compiles=${cnt - cnt0} compile-ms=${ms - ms0}" +
             err.fold("")(e => s" error=$e"))
           log.stages.sortBy(-_.ms).take(15).foreach { s =>
             println(f"  [${s.ms}%5d ms] tasks=${s.tasks}%3d in=${s.inMb}%7.1fMB " +
